@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.{Backfill, SiriSnapshotEtl}
 import graft.sources.SnapshotStorage
+import graft.sources.SnapshotStorage.{readRaw, writeTables}
 
 /** Command-line surface mirroring the reference's cli.py commands, each
   * dispatching to the library jobs:
@@ -35,9 +36,6 @@ object Cli {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
-
-  private def readRaw(spark: SparkSession, rawDir: String) =
-    SnapshotStorage.readRaw(spark, rawDir)
 
   private val SnapshotIdArg = """\d{4}/\d{2}/\d{2}/\d{2}/\d{2}""".r
   private val DateArg = """\d{4}-\d{2}-\d{2}""".r
@@ -105,9 +103,6 @@ object Cli {
     (range, ndPairs, rest0.drop(range.length))
   }
 
-  private def writeResult(r: SiriSnapshotEtl.EtlResult, outDir: String): Unit =
-    SnapshotStorage.writeTables(r, outDir)
-
   def main(args: Array[String]): Unit = {
     // stop only a session we created — embedding callers (tests, other
     // jobs) keep theirs alive across commands
@@ -120,7 +115,7 @@ object Cli {
       // reference config.py semantics) — the daemon/DAG deployment
       // needs no per-command path wiring
       case "process-snapshots" :: Nil =>
-        writeResult(SiriSnapshotEtl.run(readRaw(spark, Config.rawRoot)), Config.etlRoot)
+        writeTables(SiriSnapshotEtl.run(readRaw(spark, Config.rawRoot)), Config.etlRoot)
       case "start-daemon" :: Nil =>
         graft.streaming.SnapshotStream
           .daemon(spark, Config.rawRoot, Config.etlRoot, Config.checkpointRoot)
@@ -157,7 +152,7 @@ object Cli {
             catch { case _: org.apache.spark.sql.AnalysisException => None }
           loaded.foreach(l => raw = raw.join(l, Seq("snapshot_id"), "left_anti"))
         }
-        writeResult(SiriSnapshotEtl.run(raw), outDir)
+        writeTables(SiriSnapshotEtl.run(raw), outDir)
       case "process-snapshot" :: snapshotId :: rawDir :: outDir :: rest
           if rest.isEmpty || rest == List("--force-reload") =>
         // reference process_snapshot (process_snapshot.py:398): skip a
@@ -172,7 +167,7 @@ object Cli {
           catch { case _: org.apache.spark.sql.AnalysisException => false }
         }
         if (alreadyLoaded) println(s"snapshot $snapshotId already loaded, skipping")
-        else writeResult(SiriSnapshotEtl.run(
+        else writeTables(SiriSnapshotEtl.run(
           readRaw(spark, rawDir).filter(col("snapshot_id") === snapshotId)), outDir)
       // copy-snapshots <srcRoot> <dstRoot> [<fromId> <toId>] [--force]
       // (download-latest-snapshots / download-snapshot parity: pull a
@@ -227,7 +222,7 @@ object Cli {
           case _ => (s"${Config.etlRoot}/siri_snapshots", Config.rawRoot, Config.etlRoot)
         }
         val status = spark.read.parquet(statusParquet)
-        writeResult(Backfill.processBacklog(spark, from, to, status, readRaw(spark, rawDir)), outDir)
+        writeTables(Backfill.processBacklog(spark, from, to, status, readRaw(spark, rawDir)), outDir)
       // validate-snapshots <rawDir> [<fromId> <toId>] [--csv <path>]
       // (siri-etl-validate-snapshots DAG: range-bounded field-level
       // mismatch report, one row per mismatching field, CSV out)

@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline (open_bus_siri_etl.process_snapshot) as a
@@ -16,9 +15,11 @@ import org.apache.spark.sql.functions._
   *    process_snapshot.py:46) and counted per snapshot.
   *  - ObjectsMaker get-or-create (process_snapshot.py:51): four
   *    dimensions keyed by natural keys; first sighting creates the row,
-  *    later sightings reuse it. Here: distinct + left_anti against the
-  *    existing dim, surrogate = xxhash64(natural key) so ids need no
-  *    global coordination at 100 TB (SURVEY.md §5).
+  *    later sightings reuse it. Here: each dimension is declared once
+  *    ([[Dim]]); a batch builds its distinct keys, surrogate =
+  *    xxhash64(natural key) so ids need no global coordination at
+  *    100 TB (SURVEY.md §5), and [[graft.sources.SnapshotStorage.writeTables]]
+  *    appends only the keys the stored dimension lacks.
   *  - snapshot lifecycle stats (update_siri_snapshot_loaded,
   *    process_snapshot.py:302): per-snapshot success/fail counts and
   *    per-dimension added counts.
@@ -27,8 +28,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: one scan parses everything (from_json + two explodes,
   * all map-side); each dimension is one distinct (partial-agg) pass;
-  * fact keying joins against broadcast dims. Facts partition by
-  * snapshot date for single-partition reload.
+  * facts are keyed by hashing, with no join; every "first sighting" is a
+  * `min` aggregate per key, never a window. Facts partition by snapshot
+  * (date, minute) for single-partition reload.
   */
 object SiriSnapshotEtl {
 
@@ -92,58 +94,60 @@ object SiriSnapshotEtl {
   private def okVisits(visits: DataFrame): DataFrame =
     visits.filter(col("parse_ok"))
 
-  // ---- dimension builders (get-or-create against an optional existing dim) ----
+  // ---- the four dimensions, each declared once ----
 
-  private def newKeys(batch: DataFrame, existing: Option[DataFrame], keys: Seq[String]): DataFrame =
-    existing match {
-      case Some(e) => batch.join(e.select(keys.map(col): _*), keys, "left_anti")
-      case None => batch
-    }
-
-  /** siri_route(operator_ref, line_ref) — id = xxhash64 of the key. */
-  def routes(visits: DataFrame, existing: Option[DataFrame] = None): DataFrame = {
-    val batch = okVisits(visits).select(col("operator_ref"), col("line_ref")).distinct()
-    newKeys(batch, existing, Seq("operator_ref", "line_ref"))
-      .withColumn("siri_route_id", xxhash64(lit("route"), col("operator_ref"), col("line_ref")))
+  /** One SIRI dimension: its table, its natural key (visit columns), its
+    * surrogate — xxhash64 of a tag and the key, through the surrogates of
+    * the dimensions it references — and those references, whose
+    * surrogates its rows carry. `stored` renames key columns in the
+    * dimension's own table. */
+  private[graft] final case class Dim(table: String, key: Seq[String], id: String,
+      surrogate: Column, refs: Seq[Dim] = Nil, stored: Map[String, String] = Map.empty) {
+    /** The surrogates a row of this table carries: its references', then its own. */
+    def ids: Seq[Dim] = (refs.flatMap(_.ids) :+ this).distinct
+    def storedKey: Seq[String] = key.map(k => stored.getOrElse(k, k))
   }
+
+  private val Route = Dim("siri_routes", Seq("operator_ref", "line_ref"), "siri_route_id",
+    xxhash64(lit("route"), col("operator_ref"), col("line_ref")))
+  private val Stop = Dim("siri_stops", Seq("stop_point_ref"), "siri_stop_id",
+    xxhash64(lit("stop"), col("stop_point_ref")), stored = Map("stop_point_ref" -> "code"))
+  private val Ride = Dim("siri_rides", Route.key ++ Seq("journey_ref", "vehicle_ref"),
+    "siri_ride_id", xxhash64(lit("ride"), Route.surrogate, col("journey_ref"), col("vehicle_ref")),
+    refs = Seq(Route))
+  private val RideStop = Dim("siri_ride_stops", Ride.key ++ Stop.key :+ "order",
+    "siri_ride_stop_id", xxhash64(lit("ride_stop"), Ride.surrogate, Stop.surrogate, col("order")),
+    refs = Seq(Ride, Stop))
+  /** In `EtlResult` order. */
+  private[graft] val dims: Seq[Dim] = Seq(Route, Stop, Ride, RideStop)
+
+  /** A dimension's table from rows that hold its key once each: stored
+    * key, `attrs`, then the surrogates. */
+  private def dimTable(keyed: DataFrame, d: Dim, attrs: Column*): DataFrame =
+    keyed.select(d.key.zip(d.storedKey).map { case (k, s) => col(k).as(s) } ++ attrs ++
+      d.ids.map(r => r.surrogate.as(r.id)): _*)
+
+  private def distinctKeys(visits: DataFrame, d: Dim): DataFrame =
+    dimTable(okVisits(visits).select(d.key.map(col): _*).distinct(), d)
+
+  /** siri_route(operator_ref, line_ref). */
+  def routes(visits: DataFrame): DataFrame = distinctKeys(visits, Route)
 
   /** siri_stop(code). */
-  def stops(visits: DataFrame, existing: Option[DataFrame] = None): DataFrame = {
-    val batch = okVisits(visits).select(col("stop_point_ref").as("code")).distinct()
-    newKeys(batch, existing, Seq("code"))
-      .withColumn("siri_stop_id", xxhash64(lit("stop"), col("code")))
-  }
+  def stops(visits: DataFrame): DataFrame = distinctKeys(visits, Stop)
 
   /** siri_ride(route, journey_ref, vehicle_ref) + scheduled_start_time
     * of the FIRST sighting (reference creates once and never updates —
-    * ObjectsMaker caches the created row). */
-  def rides(visits: DataFrame, existing: Option[DataFrame] = None): DataFrame = {
-    val w = Window.partitionBy(col("operator_ref"), col("line_ref"), col("journey_ref"), col("vehicle_ref"))
-      .orderBy(col("recorded_at_time"), col("scheduled_start_time"))
-    val batch = okVisits(visits)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("operator_ref"), col("line_ref"), col("journey_ref"),
-        col("vehicle_ref"), col("scheduled_start_time"))
-    newKeys(batch, existing, Seq("operator_ref", "line_ref", "journey_ref", "vehicle_ref"))
-      .withColumn("siri_route_id", xxhash64(lit("route"), col("operator_ref"), col("line_ref")))
-      .withColumn("siri_ride_id",
-        xxhash64(lit("ride"), col("siri_route_id"), col("journey_ref"), col("vehicle_ref")))
+    * ObjectsMaker caches the created row): the least
+    * (recorded_at_time, scheduled_start_time) per key. */
+  def rides(visits: DataFrame): DataFrame = {
+    val first = okVisits(visits).groupBy(Ride.key.map(col): _*)
+      .agg(min(struct(col("recorded_at_time"), col("scheduled_start_time"))).as("first"))
+    dimTable(first, Ride, col("first.scheduled_start_time").as("scheduled_start_time"))
   }
 
   /** siri_ride_stop(ride, stop, order). */
-  def rideStops(visits: DataFrame, existing: Option[DataFrame] = None): DataFrame = {
-    val batch = okVisits(visits)
-      .select(col("operator_ref"), col("line_ref"), col("journey_ref"), col("vehicle_ref"),
-        col("stop_point_ref"), col("order")).distinct()
-    newKeys(batch, existing,
-      Seq("operator_ref", "line_ref", "journey_ref", "vehicle_ref", "stop_point_ref", "order"))
-      .withColumn("siri_route_id", xxhash64(lit("route"), col("operator_ref"), col("line_ref")))
-      .withColumn("siri_ride_id",
-        xxhash64(lit("ride"), col("siri_route_id"), col("journey_ref"), col("vehicle_ref")))
-      .withColumn("siri_stop_id", xxhash64(lit("stop"), col("stop_point_ref")))
-      .withColumn("siri_ride_stop_id",
-        xxhash64(lit("ride_stop"), col("siri_ride_id"), col("siri_stop_id"), col("order")))
-  }
+  def rideStops(visits: DataFrame): DataFrame = distinctKeys(visits, RideStop)
 
   /** siri_vehicle_location facts: every successfully parsed visit, keyed
     * by its ride-stop surrogate. Pure projection — the surrogate is a
@@ -151,42 +155,30 @@ object SiriSnapshotEtl {
     * key facts (the reference needs four DB round-trips here). */
   def vehicleLocations(visits: DataFrame): DataFrame =
     okVisits(visits)
-      .withColumn("siri_route_id", xxhash64(lit("route"), col("operator_ref"), col("line_ref")))
-      .withColumn("siri_ride_id",
-        xxhash64(lit("ride"), col("siri_route_id"), col("journey_ref"), col("vehicle_ref")))
-      .withColumn("siri_stop_id", xxhash64(lit("stop"), col("stop_point_ref")))
-      .withColumn("siri_ride_stop_id",
-        xxhash64(lit("ride_stop"), col("siri_ride_id"), col("siri_stop_id"), col("order")))
-      .select(col("snapshot_id"), col("siri_ride_stop_id"), col("recorded_at_time"),
+      .select(col("snapshot_id"), RideStop.surrogate.as(RideStop.id), col("recorded_at_time"),
         col("lon"), col("lat"), col("bearing"), col("velocity"),
         col("distance_from_journey_start"))
 
   /** Per-snapshot lifecycle stats (the siri_snapshot row the reference
-    * maintains: loaded status, parse counts, added-per-dim counts). */
+    * maintains: loaded status, parse counts, added-per-dim counts).
+    *
+    * `num_added_<table>` counts the keys first seen (least snapshot_id)
+    * IN THIS BATCH, not the keys new to the star: the batch knows
+    * nothing of the star it is written into. A one-snapshot batch (the
+    * daemon's usual micro-batch) therefore counts every key it sees,
+    * where the reference's ObjectsMaker counts only the rows it
+    * created. */
   def snapshotStats(visits: DataFrame): DataFrame = {
     val perSnapshot = visits.groupBy(col("snapshot_id")).agg(
       sum(when(col("parse_ok"), 1L).otherwise(0L)).as("num_successful_parse_vehicle_locations"),
       sum(when(col("parse_ok"), 0L).otherwise(1L)).as("num_failed_parse_vehicle_locations"))
     val ok = okVisits(visits)
-    def firstSnapshotCount(keyed: DataFrame, alias: String): DataFrame = {
-      // a dim row is "added by" the first snapshot that saw its key
-      val w = Window.partitionBy(keyed.columns.filter(_ != "snapshot_id").map(col): _*)
-        .orderBy(col("snapshot_id"))
-      keyed.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .groupBy(col("snapshot_id")).agg(count(lit(1)).as(alias))
+    val withAdded = dims.foldLeft(perSnapshot) { (stats, d) =>
+      val added = ok.groupBy(d.key.map(col): _*).agg(min(col("snapshot_id")).as("snapshot_id"))
+        .groupBy(col("snapshot_id")).agg(count(lit(1)).as(s"num_added_${d.table}"))
+      stats.join(added, Seq("snapshot_id"), "left")
     }
-    perSnapshot
-      .join(firstSnapshotCount(ok.select(col("snapshot_id"), col("operator_ref"), col("line_ref")).distinct(),
-        "num_added_siri_routes"), Seq("snapshot_id"), "left")
-      .join(firstSnapshotCount(ok.select(col("snapshot_id"), col("stop_point_ref")).distinct(),
-        "num_added_siri_stops"), Seq("snapshot_id"), "left")
-      .join(firstSnapshotCount(ok.select(col("snapshot_id"), col("operator_ref"), col("line_ref"),
-        col("journey_ref"), col("vehicle_ref")).distinct(),
-        "num_added_siri_rides"), Seq("snapshot_id"), "left")
-      .join(firstSnapshotCount(ok.select(col("snapshot_id"), col("operator_ref"), col("line_ref"),
-        col("journey_ref"), col("vehicle_ref"), col("stop_point_ref"), col("order")).distinct(),
-        "num_added_siri_ride_stops"), Seq("snapshot_id"), "left")
-      .na.fill(0L)
+    withAdded.na.fill(0L)
       // reference status semantics (process_snapshot.py:289,302): a
       // snapshot that produced nothing but failures (e.g. an unparseable
       // document) is `error` with a reason, and re-enters the backlog

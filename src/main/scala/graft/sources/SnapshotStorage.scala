@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.SiriSnapshotEtl
@@ -13,15 +16,16 @@ import graft.etl.SiriSnapshotEtl
   * Raw reads are distributed (`input_file_name`-derived ids — no
   * driver-side directory walking, unlike the reference's per-minute
   * loop); the same glob serves batch (`read`) and the daemon
-  * (`readStream` + checkpoint). Facts are date-partitioned so
-  * reloading one snapshot rewrites one partition.
+  * (`readStream` + checkpoint). Facts, parse errors and status rows
+  * are (date, minute)-partitioned, so reloading one snapshot rewrites
+  * one leaf of each.
   */
 object SnapshotStorage {
 
   private val idFromPath = raw"(\d{4}/\d{2}/\d{2}/\d{2}/\d{2})\.(json|br)"
 
   private def hasGlob(spark: SparkSession, pattern: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(pattern)
+    val p = new Path(pattern)
     Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
       .exists(_.nonEmpty)
   }
@@ -65,25 +69,8 @@ object SnapshotStorage {
   /** Distributed `.br` snapshot read: binaryFile rows decoded per
     * partition — the Spark-native shape of the reference's per-file
     * `brotli -d` subprocess loop. */
-  private def readRawBrotli(spark: SparkSession, pattern: String): DataFrame = {
-    import spark.implicits._
-    val idRe = idFromPath.r
-    spark.read.format("binaryFile").load(pattern)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (p, bytes) =>
-        val id = idRe.findFirstMatchIn(p).map(_.group(1)).getOrElse(p)
-        // name the offending file: a corrupt landing doc must fail the
-        // task with its path, not an anonymous decoder error
-        val decoded =
-          try Brotli.decompress(bytes)
-          catch { case e: java.io.IOException =>
-            throw new java.io.IOException(s"$p: ${e.getMessage}", e)
-          }
-        (id, new String(decoded, java.nio.charset.StandardCharsets.UTF_8))
-      }
-      .toDF("snapshot_id", "json")
-  }
+  private def readRawBrotli(spark: SparkSession, pattern: String): DataFrame =
+    decodeBrotli(spark.read.format("binaryFile").load(pattern))
 
   /** Streaming read of the same layout (json-lines documents carrying
     * snapshot_id + json, as the daemon's requester writes them). */
@@ -99,17 +86,22 @@ object SnapshotStorage {
     * batch path. */
   def readRawBrotliStream(spark: SparkSession, rootDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    val idRe = idFromPath.r
     val reader = spark.readStream.format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .load(s"$rootDir/*/*/*/*/*.br")
-      .select(col("path"), col("content"))
+    decodeBrotli(reader.load(s"$rootDir/*/*/*/*/*.br"))
+  }
+
+  /** binaryFile rows → (snapshot_id, json), decoded in the mapper. */
+  private def decodeBrotli(files: DataFrame): DataFrame = {
+    import files.sparkSession.implicits._
+    val idRe = idFromPath.r
+    files.select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .map { case (p, bytes) =>
         val id = idRe.findFirstMatchIn(p).map(_.group(1)).getOrElse(p)
+        // name the offending file: a corrupt landing doc must fail the
+        // task with its path, not an anonymous decoder error
         val decoded =
           try Brotli.decompress(bytes)
           catch { case e: java.io.IOException =>
@@ -120,10 +112,11 @@ object SnapshotStorage {
       .toDF("snapshot_id", "json")
   }
 
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** One lock per dimension table, so writers in one JVM append to
+    * it one at a time: concurrent appends to one directory share its
+    * `_temporary` dir, which the first job to commit deletes under the
+    * others, and two racing get-or-creates would both append a key. */
+  private val dimLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** Dimension write: append-only. Only keys not already on disk are
     * appended (left_anti), so dims monotonically grow and a backlog
@@ -131,11 +124,15 @@ object SnapshotStorage {
     * get-or-create contract (ObjectsMaker, process_snapshot.py:51). */
   private def appendNewDimKeys(dim: DataFrame, path: String, keys: Seq[String]): Unit = {
     val spark = dim.sparkSession
-    val fresh =
-      if (pathExists(spark, path))
-        dim.join(spark.read.parquet(path).select(keys.map(col).toSeq: _*), keys, "left_anti")
-      else dim
-    fresh.write.mode(SaveMode.Append).parquet(path)
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dimLocks.computeIfAbsent(fs.makeQualified(p).toString, _ => new AnyRef).synchronized {
+      val fresh =
+        if (fs.exists(p))
+          dim.join(spark.read.parquet(path).select(keys.map(col): _*), keys, "left_anti")
+        else dim
+      fresh.write.mode(SaveMode.Append).parquet(path)
+    }
   }
 
   /** `2021/07/05/12/34` → (`2021-07-05`, `1234`): date partition for
@@ -146,13 +143,37 @@ object SnapshotStorage {
       .withColumn("snapshot_minute",
         translate(substring(col("snapshot_id"), 12, 5), "/", ""))
 
+  /** Overwrite the snapshot partitions of `df`, dynamically: the
+    * write replaces exactly the (date, minute) leaves it produces rows
+    * for and nothing else (a static overwrite would wipe every
+    * previously loaded partition). A dynamic overwrite leaves alone a
+    * leaf it produces no rows for, so the leaves of `emptied` — this
+    * batch's snapshots that now have no rows here — are deleted after
+    * it. The mode is this write's option, never the session's conf,
+    * which a concurrent writer on the same session would see. */
+  private def overwriteSnapshots(df: DataFrame, path: String, emptied: Seq[Row],
+      options: (String, String)*): Unit = {
+    df.write.mode(SaveMode.Overwrite)
+      .options(options.toMap)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "zstd")
+      .partitionBy("snapshot_date", "snapshot_minute")
+      .parquet(path)
+    val table = new Path(path)
+    val fs = table.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    emptied.foreach(s => fs.delete(new Path(table,
+      s"snapshot_date=${s.getAs[String]("snapshot_date")}/" +
+        s"snapshot_minute=${s.getAs[String]("snapshot_minute")}"), true))
+  }
+
   /** Write an ETL result as the star schema — idempotently.
     *
-    * Facts / stats / parse errors partition by (snapshot_date,
-    * snapshot_minute) and overwrite DYNAMICALLY: reprocessing a
-    * snapshot replaces exactly its own leaf partition and nothing
-    * else (static overwrite would wipe every previously loaded
-    * partition on a backlog run). Dims append unseen keys only. */
+    * Facts / parse errors / stats partition by (snapshot_date,
+    * snapshot_minute), and each batch overwrites exactly its own
+    * snapshots' leaves ([[overwriteSnapshots]]): reprocessing a
+    * snapshot leaves only its new rows in every table, and no other
+    * snapshot's. Dims append unseen keys only. The status rows go
+    * last, so a snapshot reads `loaded` only once its rows are in. */
   def writeTables(r: SiriSnapshotEtl.EtlResult, outDir: String): Unit = {
     val spark = r.routes.sparkSession
     // every output table derives from the SAME parsed-visits relation,
@@ -169,49 +190,36 @@ object SnapshotStorage {
     // debug_time around each process_snapshot phase) — each section
     // wraps the Spark ACTION that materializes that table
     import graft.Logs.debugTime
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
       debugTime("write-dims", "outDir" -> outDir) {
-        appendNewDimKeys(r.routes, s"$outDir/siri_routes", Seq("operator_ref", "line_ref"))
-        appendNewDimKeys(r.stops, s"$outDir/siri_stops", Seq("code"))
-        appendNewDimKeys(r.rides, s"$outDir/siri_rides",
-          Seq("operator_ref", "line_ref", "journey_ref", "vehicle_ref"))
-        appendNewDimKeys(r.rideStops, s"$outDir/siri_ride_stops",
-          Seq("operator_ref", "line_ref", "journey_ref", "vehicle_ref", "stop_point_ref", "order"))
+        SiriSnapshotEtl.dims.zip(Seq(r.routes, r.stops, r.rides, r.rideStops)).foreach {
+          case (d, dim) => appendNewDimKeys(dim, s"$outDir/${d.table}", d.storedKey)
+        }
       }
+      // one status row per snapshot of the batch: it says which
+      // snapshots now have no facts or no parse errors
+      val stats = withSnapshotPartitions(r.snapshotStats)
+      val status = stats.collect().toSeq
       // facts: zstd (scan-bound table, best ratio at similar decode
       // speed), a parquet bloom filter on the surrogate join key
       // (validation joins probe it point-wise), and rows sorted by
       // recorded time within each file so time-range scans prune on
       // page min/max instead of reading whole row groups
       debugTime("write-vehicle-locations", "outDir" -> outDir) {
-        withSnapshotPartitions(r.vehicleLocations)
+        overwriteSnapshots(withSnapshotPartitions(r.vehicleLocations)
           .sortWithinPartitions(col("snapshot_date"), col("snapshot_minute"),
-            col("recorded_at_time"))
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd")
-          .option("parquet.bloom.filter.enabled#siri_ride_stop_id", "true")
-          .partitionBy("snapshot_date", "snapshot_minute")
-          .parquet(s"$outDir/siri_vehicle_locations")
+            col("recorded_at_time")),
+          s"$outDir/siri_vehicle_locations",
+          status.filter(_.getAs[Long]("num_successful_parse_vehicle_locations") == 0),
+          "parquet.bloom.filter.enabled#siri_ride_stop_id" -> "true")
       }
       debugTime("write-stats-and-errors", "outDir" -> outDir) {
-        Seq(
-          r.snapshotStats -> s"$outDir/siri_snapshots",
-          r.parseErrors -> s"$outDir/parse_errors",
-        ).foreach { case (df, path) =>
-          withSnapshotPartitions(df)
-            .write.mode(SaveMode.Overwrite)
-            .option("compression", "zstd")
-            .partitionBy("snapshot_date", "snapshot_minute")
-            .parquet(path)
-        }
+        overwriteSnapshots(withSnapshotPartitions(r.parseErrors), s"$outDir/parse_errors",
+          status.filter(_.getAs[Long]("num_failed_parse_vehicle_locations") == 0))
+        overwriteSnapshots(spark.createDataFrame(status.asJava, stats.schema),
+          s"$outDir/siri_snapshots", Nil)
       }
-    } finally {
-      r.visits.unpersist()
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-        prev.getOrElse("static"))
-    }
+    } finally r.visits.unpersist()
   }
 
   /** Copy raw snapshots from one storage root into another — the
@@ -231,10 +239,10 @@ object SnapshotStorage {
       fromId: Option[String] = None, toId: Option[String] = None,
       force: Boolean = false): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val srcFs = new org.apache.hadoop.fs.Path(srcRoot).getFileSystem(conf)
-    val dstFs = new org.apache.hadoop.fs.Path(dstRoot).getFileSystem(conf)
+    val srcFs = new Path(srcRoot).getFileSystem(conf)
+    val dstFs = new Path(dstRoot).getFileSystem(conf)
     val globs = Seq(s"$srcRoot/*/*/*/*/*.json", s"$srcRoot/*/*/*/*/*.br")
-      .map(new org.apache.hadoop.fs.Path(_))
+      .map(new Path(_))
     val idRe = idFromPath.r
     val found = globs.flatMap(g => Option(srcFs.globStatus(g)).getOrElse(Array.empty))
     var copied = 0L
@@ -243,7 +251,7 @@ object SnapshotStorage {
         val id = mtc.group(1); val ext = mtc.group(2)
         val inRange = fromId.forall(id >= _) && toId.forall(id <= _)
         if (inRange) {
-          val dst = new org.apache.hadoop.fs.Path(s"$dstRoot/$id.$ext")
+          val dst = new Path(s"$dstRoot/$id.$ext")
           if (force || !dstFs.exists(dst)) {
             dstFs.mkdirs(dst.getParent)
             org.apache.hadoop.fs.FileUtil.copy(
@@ -254,14 +262,5 @@ object SnapshotStorage {
       }
     }
     copied
-  }
-
-  /** Merge fresh snapshot stats into a status table (last write wins
-    * per snapshot_id) — the siri_snapshot upsert. */
-  def mergeStatus(existing: DataFrame, fresh: DataFrame): DataFrame = {
-    val cols = fresh.columns
-    existing.select(cols.map(col).toSeq: _*)
-      .join(fresh.select("snapshot_id"), Seq("snapshot_id"), "left_anti")
-      .unionByName(fresh)
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.etl.SiriSnapshotEtl
 import graft.sources.SnapshotStorage
@@ -20,12 +20,6 @@ import graft.sources.SnapshotStorage
   */
 object SnapshotStream {
 
-  /** Parse a stream of raw (snapshot_id, json) snapshot documents into
-    * typed visit rows (same projection as the batch path — the
-    * pipeline is identical code on both). */
-  def parsedVisits(rawStream: DataFrame): DataFrame =
-    SiriSnapshotEtl.parseVisits(rawStream)
-
   /** Continuous per-snapshot stats with a 2-minute watermark on
     * recorded_at_time — the streaming analogue of the siri_snapshot
     * status row (update_siri_snapshot_loaded). */
@@ -38,23 +32,28 @@ object SnapshotStream {
         sum(when(col("parse_ok"), 0L).otherwise(1L)).as("num_failed_parse_vehicle_locations"))
 
   /** The full daemon (start_process_new_snapshots_daemon): tail the raw
-    * snapshot dir, run the batch ETL per micro-batch, write the star
-    * schema idempotently (dims append new keys; facts dynamic-overwrite
-    * their own (date, minute) partitions — a retried batch rewrites, it
-    * never doubles). The checkpoint replaces the reference's
-    * last-loaded-snapshot bookkeeping; the shutdown hook is its
-    * GracefulKiller analogue: stop() interrupts the in-flight batch,
-    * and the idempotent sinks + checkpoint replay make the torn batch
-    * unobservable after restart (same end state as finish-then-stop).
-    */
+    * json-lines snapshot dir and load each micro-batch with [[start]]. */
   def daemon(spark: SparkSession, rawDir: String, outDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
+    start(SnapshotStorage.readRawStream(spark, rawDir), outDir, checkpointDir, trigger)
+
+  /** The daemon over any stream of raw (snapshot_id, json) documents:
+    * each micro-batch runs the batch ETL and writes the star with
+    * [[SnapshotStorage.writeTables]] — the batch path's own code, so a
+    * retried batch rewrites its snapshots, it never doubles them. The
+    * checkpoint replaces the reference's last-loaded-snapshot
+    * bookkeeping; the shutdown hook is its GracefulKiller analogue:
+    * stop() interrupts the in-flight batch, and the idempotent sinks +
+    * checkpoint replay make the torn batch unobservable after restart
+    * (same end state as finish-then-stop). */
+  private[graft] def start(raw: DataFrame, outDir: String, checkpointDir: String,
+      trigger: Trigger): StreamingQuery = {
     // per-batch timed sections accumulate across the daemon's lifetime
     // (reference logs.py debug_time_stats: the per-snapshot stats dict)
     // and surface under GRAFT_DEBUG when a batch runs slow
     val stats = new graft.Logs.Stats
-    val q = SnapshotStorage.readRawStream(spark, rawDir)
+    val q = raw
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -147,22 +146,4 @@ object SnapshotStream {
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "512",
   )
-
-  /** foreachBatch upsert: each micro-batch runs the batch ETL and hands
-    * the per-table DataFrames to `sink` (parquet append, JDBC upsert…).
-    * Dims are append-only new-keys (get-or-create); facts append. */
-  def upsertWriter(visits: DataFrame)(
-      sink: (String, DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    visits.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink("siri_routes", SiriSnapshotEtl.routes(batch), batchId)
-        sink("siri_stops", SiriSnapshotEtl.stops(batch), batchId)
-        sink("siri_rides", SiriSnapshotEtl.rides(batch), batchId)
-        sink("siri_ride_stops", SiriSnapshotEtl.rideStops(batch), batchId)
-        sink("siri_vehicle_locations", SiriSnapshotEtl.vehicleLocations(batch), batchId)
-        sink("siri_snapshots", SiriSnapshotEtl.snapshotStats(batch), batchId)
-        ()
-      }
 }

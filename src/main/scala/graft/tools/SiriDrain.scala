@@ -7,14 +7,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{Brotli, SnapshotStorage}
-import graft.etl.SiriSnapshotEtl
+import graft.streaming.SnapshotStream
 
 /** Measured backlog drain for the SIRI snapshot daemon — the actual
   * reference parity path (process_snapshot.py:485's minute loop) over
   * the reference's ACTUAL landing format: a minute-partitioned tree of
   * brotli-compressed SIRI-SM documents, decoded in the mapper by the
-  * pure-JVM RFC 7932 decoder and drained through the same
-  * foreachBatch star-schema write the daemon runs.
+  * pure-JVM RFC 7932 decoder and drained through the daemon's own
+  * per-batch code ([[graft.streaming.SnapshotStream.start]]).
   *
   *   runMain graft.tools.SiriDrain <workDir> <minutes> <visitsPerSnapshot>
   *     [pt<seconds>:<maxFilesPerTrigger>]
@@ -105,7 +105,7 @@ object SiriDrain {
     val hb = new graft.streaming.Heartbeat
     spark.streams.addListener(hb)
 
-    // the daemon's exact per-batch body over the .br tree source;
+    // the daemon's own per-batch code over the .br tree source;
     // AvailableNow bounds the run at the generated backlog, the
     // pt<sec>:<files> form runs the daemon's ProcessingTime cadence
     val ptMode = args.lift(3).filter(_.startsWith("pt")).map { s =>
@@ -113,16 +113,10 @@ object SiriDrain {
       (sec.toInt, files.toInt)
     }
     val t0 = System.nanoTime()
-    val q = SnapshotStorage
-      .readRawBrotliStream(spark, landing, ptMode.map(_._2))
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(ptMode.fold[Trigger](Trigger.AvailableNow()) {
+    val q = SnapshotStream.start(
+      SnapshotStorage.readRawBrotliStream(spark, landing, ptMode.map(_._2)), out, ckpt,
+      ptMode.fold[Trigger](Trigger.AvailableNow()) {
         case (sec, _) => Trigger.ProcessingTime(s"$sec seconds") })
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        SnapshotStorage.writeTables(SiriSnapshotEtl.run(batch), out)
-      }
-      .start()
     val wall = ptMode match {
       case None =>
         q.awaitTermination()

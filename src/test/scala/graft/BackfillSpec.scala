@@ -95,19 +95,54 @@ class SnapshotStorageSpec extends SparkSpec {
   import spark.implicits._
   import graft.sources.SnapshotStorage
 
-  test("status merge: fresh stats replace stale rows, others untouched") {
-    val existing = Seq(
-      ("2023/03/10/08/01", "error", 0L),
-      ("2023/03/10/08/02", "loaded", 5L)).toDF("snapshot_id", "etl_status", "n")
-    val fresh = Seq(
-      ("2023/03/10/08/01", "loaded", 3L),
-      ("2023/03/10/08/03", "loaded", 7L)).toDF("snapshot_id", "etl_status", "n")
-    val merged = SnapshotStorage.mergeStatus(existing, fresh)
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
-    assert(merged == Map(
-      "2023/03/10/08/01" -> ("loaded", 3L),
-      "2023/03/10/08/02" -> ("loaded", 5L),
-      "2023/03/10/08/03" -> ("loaded", 7L)))
+  private def load(star: String, docs: (String, String)*): Unit =
+    SnapshotStorage.writeTables(graft.etl.SiriSnapshotEtl.run(docs.toDF("snapshot_id", "json")), star)
+
+  private def rowsPerSnapshot(star: String, table: String): Map[String, Long] =
+    spark.read.parquet(s"$star/$table").groupBy("snapshot_id").count()
+      .as[(String, Long)].collect().toMap
+
+  test("reload leaves exactly the snapshot's new rows, also where it now has none") {
+    val star = java.nio.file.Files.createTempDirectory("reload").toFile.getAbsolutePath
+    val (x, y) = ("2023/03/10/08/01", "2023/03/10/08/02")
+    load(star, x -> "{ not json", y -> SiriFixtures.snapA)
+    assert(rowsPerSnapshot(star, "parse_errors") == Map(x -> 1L, y -> 1L))
+
+    // the fresh status replaces the stale one, and the stale parse error goes
+    load(star, x -> SiriFixtures.snapB)
+    val status = spark.read.parquet(s"$star/siri_snapshots")
+      .filter($"snapshot_id" === x).select("etl_status").as[String].collect()
+    assert(status.toSeq == Seq("loaded"))
+    assert(rowsPerSnapshot(star, "parse_errors") == Map(y -> 1L))
+    assert(rowsPerSnapshot(star, "siri_vehicle_locations") == Map(x -> 2L, y -> 3L))
+
+    // and back: the facts it loaded go
+    load(star, x -> "{ not json")
+    assert(rowsPerSnapshot(star, "siri_vehicle_locations") == Map(y -> 3L))
+    assert(rowsPerSnapshot(star, "parse_errors") == Map(x -> 1L, y -> 1L))
+    assert(rowsPerSnapshot(star, "siri_snapshots") == Map(x -> 1L, y -> 1L))
+  }
+
+  test("writeTables leaves the session's partitionOverwriteMode unset") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    load(java.nio.file.Files.createTempDirectory("conf").toFile.getAbsolutePath,
+      "2023/03/10/08/01" -> SiriFixtures.snapA)
+    // getAll holds only what was set: getOption would report the default
+    assert(spark.conf.getAll.get(key).isEmpty)
+  }
+
+  test("concurrent writeTables into one star keep every snapshot's facts") {
+    val star = java.nio.file.Files.createTempDirectory("concurrent").toFile.getAbsolutePath
+    load(star, "2023/03/10/07/59" -> SiriFixtures.snapA)
+    val workers = Seq(Seq("08/01", "08/03", "08/05"), Seq("08/02", "08/04", "08/06")).map { mins =>
+      scala.concurrent.Future(mins.foreach(m => load(star, s"2023/03/10/$m" -> SiriFixtures.snapA)))(
+        scala.concurrent.ExecutionContext.global)
+    }
+    workers.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    val facts = rowsPerSnapshot(star, "siri_vehicle_locations")
+    assert(facts == Seq("07/59", "08/01", "08/02", "08/03", "08/04", "08/05", "08/06")
+      .map(m => s"2023/03/10/$m" -> 3L).toMap)
   }
 
   test("writeTables is idempotent per snapshot: a backlog rerun never loses other partitions") {

@@ -171,7 +171,7 @@ class ScaleSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val stream = MemoryStream[(String, String)]
     stream.addData(("2023/03/10/08/01", SiriFixtures.snapA))
-    val visits = SnapshotStream.parsedVisits(stream.toDF().toDF("snapshot_id", "json"))
+    val visits = graft.etl.SiriSnapshotEtl.parseVisits(stream.toDF().toDF("snapshot_id", "json"))
     val q = SnapshotStream.liveSnapshotStats(visits)
       .writeStream.format("memory").queryName("live_stats")
       .outputMode("complete").start()

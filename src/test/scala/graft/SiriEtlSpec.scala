@@ -107,13 +107,19 @@ class SiriEtlSpec extends SparkSpec {
   }
 
   test("get-or-create across batches: only new keys are created (left_anti upsert)") {
-    val a = SiriSnapshotEtl.run(raw("2023/03/10/08/01" -> SiriFixtures.snapA))
-    val bVisits = SiriSnapshotEtl.parseVisits(raw("2023/03/10/08/02" -> SiriFixtures.snapB))
-    val newRoutes = SiriSnapshotEtl.routes(bVisits, existing = Some(a.routes))
-    assert(newRoutes.count() == 1) // only (30,9) is new
-    assert(newRoutes.head().getAs[Long]("operator_ref") == 30L)
-    val newRides = SiriSnapshotEtl.rides(bVisits, existing = Some(a.rides))
-    assert(newRides.count() == 1) // veh-1 ride already exists
+    import graft.sources.SnapshotStorage
+    val star = java.nio.file.Files.createTempDirectory("getorcreate").toString
+    def table(name: String) = spark.read.parquet(s"$star/$name")
+    SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw("2023/03/10/08/01" -> SiriFixtures.snapA)), star)
+    val routesA = table("siri_routes").select("operator_ref", "line_ref").as[(Long, Long)].collect().toSet
+    SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw("2023/03/10/08/02" -> SiriFixtures.snapB)), star)
+    val routesAB = table("siri_routes").select("operator_ref", "line_ref").as[(Long, Long)].collect().toSet
+    assert(routesAB -- routesA == Set((30L, 9L))) // only (30,9) is new
+    assert(table("siri_rides").count() == 3) // veh-1's ride already existed
+    SiriSnapshotEtl.dims.foreach { d =>
+      val t = table(d.table)
+      assert(t.select(d.storedKey.map(t.col): _*).distinct().count() == t.count(), d.table)
+    }
   }
 
   test("ride keeps scheduled_start_time of first sighting") {

@@ -1,40 +1,38 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.etl.SiriSnapshotEtl
+import graft.sources.SnapshotStorage
 import graft.streaming.SnapshotStream
 
-import scala.collection.mutable
-
 /** The continuous-daemon path: snapshots arrive as a stream, each
-  * micro-batch runs the same ETL as the batch path and upserts via
-  * foreachBatch (reference process_new_snapshots loop). */
+  * micro-batch runs the same ETL and star write as the batch path
+  * (reference process_new_snapshots loop). */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed snapshots produce the same tables as the batch path") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(String, String)]
-    stream.addData(("2023/03/10/08/01", SiriFixtures.snapA))
-    stream.addData(("2023/03/10/08/02", SiriFixtures.snapB))
+    val docs = Seq(("2023/03/10/08/01", SiriFixtures.snapA), ("2023/03/10/08/02", SiriFixtures.snapB))
+    val dir = Files.createTempDirectory("daemonvsbatch").toString
+    // the daemon's requester lands json-lines docs (snapshot_id, json)
+    docs.foreach(d => Seq(d).toDF("snapshot_id", "json").write.mode("append").json(s"$dir/raw"))
+    SnapshotStream.daemon(spark, s"$dir/raw", s"$dir/daemon", s"$dir/ckpt",
+      Trigger.AvailableNow()).awaitTermination(120000)
+    SnapshotStorage.writeTables(SiriSnapshotEtl.run(docs.toDF("snapshot_id", "json")), s"$dir/batch")
 
-    val visits = SnapshotStream.parsedVisits(
-      stream.toDF().toDF("snapshot_id", "json"))
-
-    val sunk = mutable.Map[String, Long]().withDefaultValue(0L)
-    val q = SnapshotStream.upsertWriter(visits) { (table, df, _) =>
-      sunk.synchronized { sunk(table) += df.count() }
-    }.start()
-    q.awaitTermination(120000)
-
-    assert(sunk("siri_vehicle_locations") == 5) // 3 ok in A + 2 in B
-    assert(sunk("siri_snapshots") == 2)
-    assert(sunk("siri_routes") >= 3) // (25,1),(25,3) in A; (30,9) new in B
-    // batch-path equivalence on the fact count
-    val batch = graft.etl.SiriSnapshotEtl.run(
-      Seq(("2023/03/10/08/01", SiriFixtures.snapA),
-        ("2023/03/10/08/02", SiriFixtures.snapB)).toDF("snapshot_id", "json"))
-    assert(batch.vehicleLocations.count() == 5)
+    val tables = SiriSnapshotEtl.dims.map(_.table) ++
+      Seq("siri_vehicle_locations", "siri_snapshots", "parse_errors")
+    tables.foreach { t =>
+      val daemon = spark.read.parquet(s"$dir/daemon/$t")
+      val batch = spark.read.parquet(s"$dir/batch/$t")
+      assert(daemon.schema == batch.schema, t)
+      assert(daemon.count() > 0, t)
+      assert(daemon.exceptAll(batch).isEmpty && batch.exceptAll(daemon).isEmpty, t)
+    }
   }
 
   test("re-delivered snapshot dedups within the watermark on RocksDB state") {
@@ -47,7 +45,7 @@ class StreamingSpec extends SparkSpec {
       stream.addData(("2023/03/10/08/01", SiriFixtures.snapA))
 
       val deduped = SnapshotStream.dedupedVisits(
-        SnapshotStream.parsedVisits(stream.toDF().toDF("snapshot_id", "json")))
+        SiriSnapshotEtl.parseVisits(stream.toDF().toDF("snapshot_id", "json")))
       val q = deduped.writeStream.format("memory")
         .queryName("dedup_out").outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -65,7 +63,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val stream = MemoryStream[(String, String)]
       stream.addData(("2023/03/10/08/01", SiriFixtures.snapA))
-      val q = SnapshotStream.parsedVisits(stream.toDF().toDF("snapshot_id", "json"))
+      val q = SiriSnapshotEtl.parseVisits(stream.toDF().toDF("snapshot_id", "json"))
         .writeStream.format("memory").queryName("hb_out").outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination(120000)
