@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -21,18 +19,31 @@ import org.apache.spark.sql.SparkSession
   *   cannot become the gating number; raw pass times are persisted in
   *   the bench files as "passes".
   * - Results append to bench/history.jsonl and overwrite
-  *   bench/latest.json; regressions >1.5× vs the previous run are
+  *   bench/latest_<sf>.json; regressions >1.5× vs the previous run are
   *   reported on stderr so a slow round is loud, not archaeological.
+  *
+  * `--list` prints the registry (sorted, one key per line) and exits.
+  * Environment:
+  *  - SPARK_GRAFT_SF_DIR: the table directory (default: the sf0.1
+  *    test tables);
+  *  - SPARK_GRAFT_CPUS: local[N] parallelism and shuffle partitions
+  *    (default max(4, available processors));
+  *  - SPARK_GRAFT_BENCH_ONLY=a,b: time only these queries; such a
+  *    subset run never advances the baseline files;
+  *  - SPARK_GRAFT_BENCH_PASSES=1: one pass per query instead of
+  *    best-of-2 / median-of-3;
+  *  - SPARK_GRAFT_BENCH_CHILD (any value): write no bench/ files and no
+  *    regression report — for runs whose caller owns the artifacts
+  *    (tools/seg_gate.sh, one fresh JVM per family);
+  *  - SPARK_GRAFT_BENCH_OUT=<path>: also write the full, uncapped JSON
+  *    line to this file;
+  *  - SPARK_GRAFT_BENCH_PIN_EDGES=1: pin the graph family's shared edge
+  *    relation before the timed loop (see below).
   */
 object Bench {
-  /** Optional comma-separated query subset (SPARK_GRAFT_BENCH_ONLY) —
-    * the knob the isolate mode and targeted scale runs (sf1 heavy
-    * families) use. */
   private def onlySet: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-  /** Child runs (isolate mode) print their JSON line but never write
-    * bench/ files or the regression report — the parent owns those. */
   private def isChild: Boolean = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
 
   def main(args: Array[String]): Unit = {
@@ -45,24 +56,11 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")) {
-      runIsolated(sfDir); return
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // production optimizer mode: graft extensions + the top-k
-      // rewrite ON, same as GraftSession — the gating numbers must
-      // measure the plans the library actually ships
-      .config("spark.graft.topkRewrite.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.install(spark)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
+    // production optimizer mode: the gating numbers must measure the
+    // plans the library actually ships
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM: touch every table + exercise codegen/agg/join paths
@@ -98,14 +96,8 @@ object Bench {
     }
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // SPARK_GRAFT_BENCH_ORDER=reverse runs queries in reverse-sorted
-    // order: diffing the per-query times between the two orders
-    // empirically separates cache/GC bleed from real regressions
-    val ordered = {
-      val s = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => onlySet.forall(_(n)) }
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse")) s.reverse else s
-    }
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => onlySet.forall(_(n)) }
     // Self-defending timing: each query runs MULTIPLE in-process passes
     // and the reported number is best-of-2 (median-of-3 for queries whose
     // first pass is >= 3s). One environment spike — page-cache eviction,
@@ -114,8 +106,8 @@ object Bench {
     // one-off spikes on the driver-gated run that builder-local reruns
     // couldn't reproduce). All pass times are persisted alongside the
     // adjudicated value so the spread itself is auditable.
-    // SPARK_GRAFT_BENCH_PASSES=1 restores single-pass (used by the
-    // isolate-mode children, where the fresh JVM is the defense).
+    // SPARK_GRAFT_BENCH_PASSES=1 restores single-pass (used by
+    // tools/seg_gate.sh, where the fresh JVM is the defense).
     val singlePass = sys.env.get("SPARK_GRAFT_BENCH_PASSES").contains("1")
     val heavyCutoff = 3.0
     val passesMap = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
@@ -172,11 +164,10 @@ object Bench {
 
   /** Render the one-line JSON, persist bench files + the regression
     * report (skipped in child JVMs), print the budget-capped stdout
-    * line, and exit nonzero on any failure. Shared by the in-process
-    * path and the isolate-mode parent. */
+    * line, and exit nonzero on any failure. */
   private def emit(results: Seq[(String, Double)],
                    errorsSeq: Seq[(String, String)], sfDir: String,
-                   passes: Seq[(String, Seq[Double])] = Nil): Unit = {
+                   passes: Seq[(String, Seq[Double])]): Unit = {
     val errors = scala.collection.mutable.LinkedHashMap(errorsSeq: _*)
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -239,8 +230,8 @@ object Bench {
     // Regression report vs the previous persisted run AT THE SAME SF
     // (same machine, successive rounds): anything >1.5× slower and
     // >0.5s absolute. A shared baseline would diff across scale
-    // factors and flag nonsense. Child JVMs (isolate mode) skip all
-    // file bookkeeping — the parent persists the merged run.
+    // factors and flag nonsense. Child JVMs (SPARK_GRAFT_BENCH_CHILD)
+    // skip all file bookkeeping — their caller persists the merged run.
     //
     // A run with ANY failed query never advances latest_<sf>.json or
     // history.jsonl: fail-fast timings (~0.06s analysis errors) would
@@ -289,8 +280,8 @@ object Bench {
     }
 
     // SPARK_GRAFT_BENCH_OUT: write the FULL line (uncapped) to a file —
-    // how BenchProtocol's child runs hand their complete per-query map
-    // back to the parent (the stdout line is budget-capped).
+    // how tools/seg_gate.sh's per-family runs hand their complete
+    // per-query map back (the stdout line is budget-capped).
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       try Files.writeString(Paths.get(p), line + "\n")
       catch { case e: Throwable =>
@@ -300,52 +291,5 @@ object Bench {
 
     println(stdoutLine)
     if (errors.nonEmpty) sys.exit(3)
-  }
-
-  /** SPARK_GRAFT_BENCH_ISOLATE=1: run every (selected) query in a
-    * FRESH JVM — each child re-warms and times exactly one query, so
-    * page-cache/GC/JIT state cannot bleed between entries. This is the
-    * gating-artifact mode: slower wall-clock, but per-query numbers
-    * are environment-independent by construction. The child command
-    * replicates this JVM's flags (add-opens, heap) and classpath. */
-  private def runIsolated(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val names = SparkEntry.queries.keySet.toSeq.sorted
-      .filter(n => onlySet.forall(_(n)))
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val cp = sys.props("java.class.path")
-    val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val errors = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val timing = """"([A-Za-z0-9_]+)":([0-9.]+)""".r
-    names.foreach { n =>
-      val pb = new ProcessBuilder(
-        (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava)
-      val env = pb.environment()
-      env.put("SPARK_GRAFT_SF_DIR", sfDir)
-      env.put("SPARK_GRAFT_BENCH_ONLY", n)
-      env.put("SPARK_GRAFT_BENCH_CHILD", "1")
-      env.put("SPARK_GRAFT_BENCH_PASSES", "1") // fresh JVM IS the defense
-      env.remove("SPARK_GRAFT_BENCH_ISOLATE")
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes())
-      val rc = proc.waitFor()
-      val qIdx = out.indexOf("\"queries\":")
-      val t = if (qIdx < 0) None
-        else timing.findFirstMatchIn(out.substring(qIdx))
-          .filter(_.group(1) == n).map(_.group(2).toDouble)
-      t match {
-        case Some(v) =>
-          results += n -> v
-          System.err.println(f"[bench-isolate] $n%-28s $v%8.3fs rc=$rc")
-          if (rc != 0) errors += n -> s"child exited $rc"
-        case None =>
-          errors += n -> s"child rc=$rc, no timing parsed (stdout ${out.length} chars)"
-          System.err.println(s"[bench-isolate] $n FAILED rc=$rc")
-      }
-    }
-    emit(results.toSeq, errors.toSeq, sfDir)
   }
 }

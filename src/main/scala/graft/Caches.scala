@@ -25,27 +25,15 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
   private val tracked = mutable.ArrayBuffer.empty[Dataset[_]]
   private val releaseHooks = mutable.ArrayBuffer.empty[() => Unit]
-  private val trackedReleaseHooks = mutable.ArrayBuffer.empty[() => Unit]
 
   /** Register a callback to run at every [[releaseAll]] — for operator
-    * objects holding derived per-JVM memos (e.g. Dedup's doubled-corpus
-    * shift) whose validity is tied to the same "results of the previous
-    * operator are materialized" epoch as the tracked caches. Hooks are
-    * permanent (registered once from an object initializer). */
+    * objects holding per-JVM memos whose validity is tied to the same
+    * "results of the previous operator are materialized" epoch as the
+    * tracked caches: Dedup's doubled-corpus shift, and Graph's shared
+    * edge relation (a [[persistTracked]] handle, so it must die with
+    * its blocks). Hooks are permanent (registered once from an object
+    * initializer). */
   def onRelease(hook: () => Unit): Unit = synchronized { releaseHooks += hook }
-
-  /** Like [[onRelease]], but ALSO fired by [[releaseTrackedOnly]] — for
-    * memos that hold [[persistTracked]] HANDLES (e.g. Graph's shared
-    * edge relation). Such a memo's validity is tied to the blocks, not
-    * the epoch: once the handle is unpersisted by EITHER release path,
-    * returning it would silently hand out a relation the caller
-    * believes is materialized but is not (it would re-derive from
-    * scratch on every consumer — exactly what a MemoAB measurement
-    * must not conflate with the memo-rebuild tax). Scalar memos
-    * (Dedup's doubled-corpus shift) stay on [[onRelease]]: they wrap
-    * no storage and are what releaseTrackedOnly exists to preserve. */
-  def onTrackedRelease(hook: () => Unit): Unit =
-    synchronized { trackedReleaseHooks += hook }
 
   /** Persist MEMORY_AND_DISK and remember the handle for [[releaseAll]]. */
   def persistTracked[T](ds: Dataset[T]): Dataset[T] = synchronized {
@@ -54,44 +42,19 @@ object Caches {
     ds
   }
 
-  /** Remember an already-persisted handle for [[releaseAll]]. */
-  def register(ds: Dataset[_]): Unit = synchronized { tracked += ds }
-
-  /** Unpersist every tracked handle and forget them. Non-blocking by
-    * default (a long-lived session doesn't want to stall on block
-    * removal); benchmark hosts pass `blocking = true` so each timed
-    * entry starts from a deterministic storage state — lingering
-    * async-freed blocks otherwise make an entry's memory pressure
-    * depend on which query ran before it (the order-dependence the
-    * fwd/fwd/rev protocol exists to detect). */
+  /** Unpersist every tracked handle, forget them, and fire the release
+    * hooks. Non-blocking by default (a long-lived session doesn't want
+    * to stall on block removal); benchmark hosts pass `blocking = true`
+    * so each timed entry starts from a deterministic storage state —
+    * lingering async-freed blocks otherwise make an entry's memory
+    * pressure depend on which query ran before it. */
   def releaseAll(blocking: Boolean = false): Unit = synchronized {
     tracked.foreach { ds =>
       try ds.unpersist(blocking) catch { case _: Throwable => () }
     }
     tracked.clear()
-    (releaseHooks ++ trackedReleaseHooks).foreach { h =>
+    releaseHooks.foreach { h =>
       try h() catch { case _: Throwable => () }
     }
   }
-
-  /** Unpersist tracked handles WITHOUT firing the epoch hooks — i.e.
-    * derived per-JVM SCALAR memos (Dedup's doubled-corpus shift)
-    * survive. Memos registered via [[onTrackedRelease]] (those holding
-    * persistTracked handles, e.g. Graph's shared edges) ARE cleared:
-    * their cached blocks die here, so keeping the handle would return
-    * an unpersisted relation that silently re-derives per consumer.
-    * MEASUREMENT-ONLY (tools/MemoAB's A/B isolating the memo-rebuild
-    * tax from a flagged query's wall time); every production host
-    * keeps calling [[releaseAll]], whose hook firing is the
-    * correctness-of-caching epoch discipline. */
-  private[graft] def releaseTrackedOnly(blocking: Boolean = false): Unit =
-    synchronized {
-      tracked.foreach { ds =>
-        try ds.unpersist(blocking) catch { case _: Throwable => () }
-      }
-      tracked.clear()
-      trackedReleaseHooks.foreach { h =>
-        try h() catch { case _: Throwable => () }
-      }
-    }
 }

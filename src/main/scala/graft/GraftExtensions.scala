@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.functions.{ApproxDistinctRewrite, GraftFunctions, NativeHashRewrite, TextKernelRewrite, TopKRewrite}
 import graft.plans.AsOfJoinStrategy
 
 /** Session extensions: custom planner strategy (as-of join) + optimizer
-  * rule (portable-hash → native kernel). Install at session build:
+  * rules (native-hash, text-kernel, approx-distinct and top-k
+  * rewrites). Install at session build:
   *
   *   SparkSession.builder().withExtensions(new GraftExtensions)...
   *
@@ -16,35 +19,22 @@ import graft.plans.AsOfJoinStrategy
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectOptimizerRule(_ => NativeHashRewrite)
-    e.injectOptimizerRule(_ => TextKernelRewrite)
-    e.injectOptimizerRule(_ => ApproxDistinctRewrite)
-    e.injectOptimizerRule(_ => TopKRewrite)
+    GraftExtensions.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }
 
 object GraftExtensions {
+  /** The optimizer rules, in injection order — the one list both the
+    * builder hook and [[install]] add. */
+  private val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(NativeHashRewrite, TextKernelRewrite, ApproxDistinctRewrite, TopKRewrite)
+
   def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(NativeHashRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NativeHashRewrite
-    }
-    if (!spark.experimental.extraOptimizations.contains(TextKernelRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TextKernelRewrite
-    }
-    if (!spark.experimental.extraOptimizations.contains(ApproxDistinctRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    }
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-    }
+    val ex = spark.experimental
+    if (!ex.extraStrategies.contains(AsOfJoinStrategy))
+      ex.extraStrategies = ex.extraStrategies :+ AsOfJoinStrategy
+    val missing = optimizerRules.filterNot(ex.extraOptimizations.contains)
+    if (missing.nonEmpty) ex.extraOptimizations = ex.extraOptimizations ++ missing
     GraftFunctions.register(spark)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.debug._
 
 /** Dumps the formatted physical plan of every SparkEntry query so plan
@@ -19,19 +18,11 @@ object PlanAudit {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "target/plans"
     val only = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // production optimizer mode (same as Bench/Verify): the audited
-      // plans must be the plans the library ships — without this the
-      // dumps showed the UN-rewritten window form for every rank-prefix
-      // query and the audit could not see whether TopKRewrite fired
-      .config("spark.graft.topkRewrite.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.install(spark)
+    // production optimizer mode (same as Bench/Verify): the audited
+    // plans must be the plans the library ships — without it the dumps
+    // showed the UN-rewritten window form for every rank-prefix query
+    // and the audit could not see whether TopKRewrite fired
+    val spark = GraftSession.build("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     // rank-prefix audit: one line per query stating whether the opt-in

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,11 @@ object Verify {
     // is a local-iteration convenience; the driver passes two args
     val sfDir = args(0); val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same optimizer mode as GraftSession/Bench: the correctness
-      // gate must exercise the plans the library ships (the top-k
-      // rewrite included), not a de-optimized variant
-      .config("spark.graft.topkRewrite.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // same optimizer mode as Bench: the correctness gate must exercise
+    // the plans the library ships (the top-k rewrite included), not a
+    // de-optimized variant
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     // SPARK_GRAFT_STRICT_CODEGEN=1: the codegen-honesty sweep (VERDICT
     // r14 item 1) — a failed expression compile THROWS instead of
     // silently interpreting (the r13 CodeRoute failure mode), so a
@@ -27,12 +21,10 @@ object Verify {
     // same sweep in sbt test; this env makes it available as a
     // standalone gate log at any SF.
     if (sys.env.get("SPARK_GRAFT_STRICT_CODEGEN").contains("1")) {
-      builder.config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-        .config("spark.sql.codegen.fallback", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      spark.conf.set("spark.sql.codegen.fallback", "false")
       System.err.println("[verify] STRICT CODEGEN: factoryMode=CODEGEN_ONLY, fallback=false")
     }
-    val spark = builder.getOrCreate()
-    GraftExtensions.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failures are recorded EXPLICITLY: a query that throws gets an

@@ -986,8 +986,8 @@ object EventsEtl {
     // (guide §5 build-once-per-plan): the shipped r8–r15 form ran
     // funnelLevels per window point, recomputing the user base and the
     // level-1 view-distinct 3×. Only pairs/anchors/l3/l2 depend on the
-    // window. r16 sf10 A/B (tools/FunnelAB, interleaved fresh-JVM
-    // passes, identical output checksums): shipped 22.3/12.7s vs
+    // window. r16 sf10 A/B (interleaved fresh-JVM passes, identical
+    // output checksums; OPTIMIZATION_r16.md): shipped 22.3/12.7s vs
     // shared 12.4/11.4s. Per-window output is EXACTLY funnelLevels'
     // rollup — windowFunnel (the single-point query) keeps its own
     // plan.

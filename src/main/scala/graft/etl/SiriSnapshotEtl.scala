@@ -193,35 +193,12 @@ object SiriSnapshotEtl {
   }
 
   /** Reconciliation (validate_snapshots.py): join the star back together
-    * and compare field-by-field against a fresh parse. Returns mismatch
-    * rows; empty ⇒ valid. */
-  def validate(visits: DataFrame, facts: DataFrame, rideStopDim: DataFrame,
-      rideDim: DataFrame, stopDim: DataFrame): DataFrame = {
-    val reassembled = facts
-      .join(broadcast(rideStopDim.select(col("siri_ride_stop_id"), col("siri_ride_id"),
-        col("siri_stop_id"), col("order"))), Seq("siri_ride_stop_id"))
-      .join(broadcast(rideDim.select(col("siri_ride_id"), col("journey_ref"),
-        col("vehicle_ref"), col("scheduled_start_time"))), Seq("siri_ride_id"))
-      .join(broadcast(stopDim.select(col("siri_stop_id"), col("code"))), Seq("siri_stop_id"))
-      .select(col("snapshot_id"), col("recorded_at_time"), col("lon"), col("lat"),
-        col("bearing"), col("velocity"), col("distance_from_journey_start"),
-        col("journey_ref"), col("vehicle_ref"), col("scheduled_start_time"),
-        col("code"), col("order"))
-    val expected = visits.filter(col("parse_ok"))
-      .select(col("snapshot_id"), col("recorded_at_time"), col("lon"), col("lat"),
-        col("bearing"), col("velocity"), col("distance_from_journey_start"),
-        col("journey_ref"), col("vehicle_ref"), col("scheduled_start_time"),
-        col("stop_point_ref").as("code"), col("order"))
-    reassembled.exceptAll(expected).withColumn("side", lit("db_only"))
-      .unionAll(expected.exceptAll(reassembled).withColumn("side", lit("parse_only")))
-  }
-
-  /** Field-level reconciliation report (validate_snapshots.py:100 emits
-    * one row per mismatching FIELD, keyed by the vehicle-location
-    * natural key, with expected vs actual): both derivations join on
-    * the location key, then each compared field contributes its own
-    * mismatch row. Rows present on only one side report field
-    * 'presence'. Empty result ⇒ valid. */
+    * and compare it against a fresh parse. Like validate_snapshots.py:100
+    * it emits one row per mismatching FIELD, keyed by the
+    * vehicle-location natural key, with expected vs actual: both
+    * derivations join on the location key, then each compared field
+    * contributes its own mismatch row. Rows present on only one side
+    * report field 'presence'. Empty result ⇒ valid. */
   def validateFields(visits: DataFrame, facts: DataFrame, rideStopDim: DataFrame,
       rideDim: DataFrame, stopDim: DataFrame): DataFrame = {
     val locKey = Seq("snapshot_id", "recorded_at_time", "lon", "lat",

@@ -43,13 +43,11 @@ object Graph {
     scala.collection.mutable.HashMap.empty[(String, String), DataFrame]
   private val pinnedKeys =
     scala.collection.mutable.HashSet.empty[(String, String)]
-  // onTrackedRelease, not onRelease: the memo holds persistTracked
-  // HANDLES, so it must die whenever the blocks do — including
-  // MemoAB's releaseTrackedOnly path, which would otherwise leave a
-  // handle whose cache is gone (both A/B arms silently re-deriving).
-  // PINNED entries survive: their storage is plain-persisted outside
-  // Caches tracking, so the epoch release never touches their blocks.
-  graft.Caches.onTrackedRelease(() => edgesMemo.synchronized {
+  // the memo holds persistTracked HANDLES, so it must die whenever the
+  // blocks do. PINNED entries survive: their storage is plain-persisted
+  // outside Caches tracking, so the epoch release never touches their
+  // blocks.
+  graft.Caches.onRelease(() => edgesMemo.synchronized {
     edgesMemo.filterInPlace { case (k, _) => pinnedKeys.contains(k) }
   })
 
@@ -57,8 +55,8 @@ object Graph {
     * production-composition mode for a long-lived host running many
     * graph queries (and Bench's SPARK_GRAFT_BENCH_PIN_EDGES gate
     * artifact). The relation is plain-persisted (NOT Caches-tracked),
-    * installed in the memo, and survives releaseAll/releaseTrackedOnly
-    * until [[unpinSharedEdges]]. Build runs outside the memo lock,
+    * installed in the memo, and survives releaseAll until
+    * [[unpinSharedEdges]]. Build runs outside the memo lock,
     * same discipline as [[sharedEdges]]. */
   def pinSharedEdges(spark: SparkSession, dir: String): DataFrame = {
     val key = (org.apache.spark.sql.graft.GraftShim.sessionUUID(spark), dir)
@@ -119,8 +117,8 @@ object Graph {
     }
   }
 
-  /** The retired self-join form, kept for the equivalence spec and
-    * the tools/EdgesAB measurement. */
+  /** The retired self-join form, kept as the equivalence spec's
+    * reference. */
   private[graft] def coOccurrenceEdgesJoinForm(spark: SparkSession,
       dir: String): DataFrame = {
     val items = Tables.lineitem(spark, dir)

@@ -418,8 +418,7 @@ object Multimodal {
     * documented at [[Dedup.bandedHammingPairs]]. */
   def phashDedup(spark: SparkSession, dir: String,
       maxBucket: Long = Long.MaxValue): DataFrame =
-    Dedup.bandedHammingPairs(
-      phashSimsFrom(spark, decodedPlanes(spark, dir)), 2, maxBucket)
+    phashDedupFrom(spark, decodedPlanes(spark, dir), maxBucket)
 
   private[graft] def phashDedupFrom(spark: SparkSession, planes: DataFrame,
       maxBucket: Long = Long.MaxValue): DataFrame =

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured backlog drain for the corpus streaming daemon (VERDICT r8
@@ -24,14 +23,9 @@ object StreamDrain {
     val workDir = if (args.length > 1) args(1) else
       Files.createTempDirectory("streamdrain").toString
     val nFiles = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
+    val spark = graft.GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val landing = s"$workDir/landing"

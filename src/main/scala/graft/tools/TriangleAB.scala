@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf10 A/B for the PAST-the-broadcast-gate triangle fallback (VERDICT
@@ -33,16 +33,9 @@ object TriangleAB {
     val passes = if (args.length > 1) args(1).toInt else 2
     val variants = (if (args.length > 2) args(2) else "wedge,wedgearr,intersect")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
+    val spark = graft.GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- shared inputs, persisted once (both arms read the same cache)

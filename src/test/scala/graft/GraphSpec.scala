@@ -34,6 +34,24 @@ class GraphSpec extends SparkSpec {
     Caches.releaseAll(); spark.catalog.clearCache()
   }
 
+  test("pinned shared edges survive releaseAll until unpinned") {
+    Caches.releaseAll(); spark.catalog.clearCache()
+    val pinned = Graph.pinSharedEdges(spark, sf0001)
+    try {
+      Caches.releaseAll()
+      val a = Graph.sharedEdges(spark, sf0001)
+      assert(a eq pinned, "releaseAll must keep the pinned handle in the memo")
+      assert(a.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "releaseAll must not unpersist the pinned relation")
+    } finally Graph.unpinSharedEdges(spark, sf0001)
+    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "unpin must unpersist the pinned relation")
+    Caches.releaseAll()
+    val b = Graph.sharedEdges(spark, sf0001)
+    assert(!(b eq pinned), "after unpin the next epoch must build a fresh relation")
+    Caches.releaseAll(); spark.catalog.clearCache()
+  }
+
   test("triangleCounts matches the naive u<v wedge enumeration") {
     val edges = Graph.coOccurrenceEdges(spark, sf0001).cache()
     try {

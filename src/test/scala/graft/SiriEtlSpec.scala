@@ -133,7 +133,7 @@ class SiriEtlSpec extends SparkSpec {
   test("validate: star-schema reassembly reproduces the parse exactly (validate_snapshots)") {
     val r = SiriSnapshotEtl.run(raw("2023/03/10/08/01" -> SiriFixtures.snapA,
       "2023/03/10/08/02" -> SiriFixtures.snapB))
-    val mismatches = SiriSnapshotEtl.validate(r.visits, r.vehicleLocations,
+    val mismatches = SiriSnapshotEtl.validateFields(r.visits, r.vehicleLocations,
       r.rideStops, r.rides, r.stops)
     assert(mismatches.count() == 0)
   }

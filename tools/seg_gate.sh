@@ -1,7 +1,21 @@
 #!/bin/bash
-# Segmented sf10 gate: one fresh 16g JVM per query family (prefix),
-# SPARK_GRAFT_BENCH_OUT per segment. One family's allocation failure
-# cannot discard the rest (VARIANCE_r12 §4).
+# Segmented gate for the query surface — the one multi-JVM timing
+# protocol: one fresh 16g JVM per query family (prefix) and pass, so
+# one family's allocation failure cannot discard the rest
+# (VARIANCE_r12 §4).
+#
+#   tools/seg_gate.sh <sfDir> <outPrefix e.g. bench/BENCH_r15_sf10_seg>
+#
+# Reads: SEG_PASSES (fresh-JVM passes per family, default 2) and
+# SEG_ONLY=fam1,fam2 (run only these families). Each pass runs
+# `graft.Bench` with:
+#   SPARK_GRAFT_SF_DIR=<sfDir>
+#   SPARK_GRAFT_BENCH_ONLY=<the family's keys>
+#   SPARK_GRAFT_BENCH_PASSES=1  (one timed pass; the fresh JVM is the
+#                                defense against a one-off spike)
+#   SPARK_GRAFT_BENCH_CHILD=1   (no bench/ files; this script merges)
+#   SPARK_GRAFT_BENCH_OUT=<outPrefix>_<fam>_p<pass>.json
+# and merges a family's passes into <outPrefix>_<fam>.json.
 #
 # Families are DERIVED from the code's query registry (`graft.Bench
 # --list`), not from a bench artifact (ADVICE r14 item 3: the r14
@@ -24,7 +38,6 @@
 # for silent interpreted-eval fallbacks (the r13 CodeRoute failure
 # mode: janino rejects a generated fragment, Spark logs a warning and
 # quietly runs ~10× slower — a perf gate must treat that as red).
-#   tools/seg_gate.sh <sfDir> <outPrefix e.g. bench/BENCH_r15_sf10_seg>
 set -u
 cd "$(dirname "$0")/.."
 SFDIR=${1:?sfDir}; OUTP=${2:?outPrefix}
