@@ -36,9 +36,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    regression report — for runs whose caller owns the artifacts
   *    (tools/seg_gate.sh, one fresh JVM per family);
   *  - SPARK_GRAFT_BENCH_OUT=<path>: also write the full, uncapped JSON
-  *    line to this file;
-  *  - SPARK_GRAFT_BENCH_PIN_EDGES=1: pin the graph family's shared edge
-  *    relation before the timed loop (see below).
+  *    line to this file.
   */
 object Bench {
   private def onlySet: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -75,25 +73,6 @@ object Bench {
     } catch { case _: Throwable => () }
     Caches.releaseAll()
     spark.catalog.clearCache()
-
-    // SPARK_GRAFT_BENCH_PIN_EDGES=1: the PRODUCTION-COMPOSITION mode
-    // for the graph family (VERDICT r14 item 4). A real long-lived
-    // session builds the shared co-occurrence edge relation once and
-    // runs many graph queries against it; the default per-query gate
-    // instead charges every entry its own ~23s sf10 build (fair
-    // attribution, wrong composition). This mode pins the relation
-    // before the timed loop (build time reported untimed on stderr)
-    // so per-query numbers measure the algorithms, not the shared
-    // input. clearCache() between queries is skipped in this mode —
-    // it would evict the pinned blocks; releaseAll still unpersists
-    // every per-query tracked intermediate.
-    val pinEdges = sys.env.get("SPARK_GRAFT_BENCH_PIN_EDGES").contains("1")
-    if (pinEdges) {
-      val t0 = System.nanoTime()
-      graft.ops.Graph.pinSharedEdges(spark, sfDir)
-      System.err.println(
-        f"[bench] pinned shared edges in ${(System.nanoTime() - t0) / 1e9}%.1fs (untimed)")
-    }
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -135,7 +114,7 @@ object Bench {
         // GONE, not queued for async removal — otherwise its memory
         // pressure depends on which query ran before it
         Caches.releaseAll(blocking = true)
-        if (!pinEdges) spark.catalog.clearCache()
+        spark.catalog.clearCache()
         System.gc()
         (dt, ok)
       }

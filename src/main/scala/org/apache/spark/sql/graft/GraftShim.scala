@@ -24,11 +24,4 @@ object GraftShim {
 
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
-
-  /** Stable, unique per-session id (classic.SparkSession.sessionUUID —
-    * not exposed on the sql.SparkSession facade in Spark 4). Memo keys
-    * use this instead of System.identityHashCode, whose value can
-    * collide or be reused by a new session after the old is GC'd. */
-  def sessionUUID(spark: SparkSession): String =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 }

@@ -9,11 +9,6 @@ import graft.ops.{Dedup, Graph, Pipeline, Similarity}
   * baseline, directional asymmetry). */
 class GraphPipelineR5Spec extends SparkSpec {
 
-  override def withFixture(test: NoArgTest) = {
-    try super.withFixture(test)
-    finally { Caches.releaseAll(); spark.catalog.clearCache() }
-  }
-
   test("pageRank mass is conserved (sums to ~1 each run)") {
     val total = Graph.pageRank(spark, sf0001)
       .agg(sum(col("rank"))).head.getDouble(0)

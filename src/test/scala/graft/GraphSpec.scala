@@ -22,36 +22,6 @@ class GraphSpec extends SparkSpec {
     assert(fast.forall(r => r.getLong(0) < r.getLong(1)))
   }
 
-  test("sharedEdges memoizes per release epoch and clears on releaseAll") {
-    Caches.releaseAll(); spark.catalog.clearCache()
-    val a = Graph.sharedEdges(spark, sf0001)
-    val b = Graph.sharedEdges(spark, sf0001)
-    assert(a eq b, "same epoch must return the SAME persisted relation")
-    assert(a.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    Caches.releaseAll()
-    val c = Graph.sharedEdges(spark, sf0001)
-    assert(!(c eq a), "releaseAll must invalidate the memo (epoch discipline)")
-    Caches.releaseAll(); spark.catalog.clearCache()
-  }
-
-  test("pinned shared edges survive releaseAll until unpinned") {
-    Caches.releaseAll(); spark.catalog.clearCache()
-    val pinned = Graph.pinSharedEdges(spark, sf0001)
-    try {
-      Caches.releaseAll()
-      val a = Graph.sharedEdges(spark, sf0001)
-      assert(a eq pinned, "releaseAll must keep the pinned handle in the memo")
-      assert(a.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "releaseAll must not unpersist the pinned relation")
-    } finally Graph.unpinSharedEdges(spark, sf0001)
-    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "unpin must unpersist the pinned relation")
-    Caches.releaseAll()
-    val b = Graph.sharedEdges(spark, sf0001)
-    assert(!(b eq pinned), "after unpin the next epoch must build a fresh relation")
-    Caches.releaseAll(); spark.catalog.clearCache()
-  }
-
   test("triangleCounts matches the naive u<v wedge enumeration") {
     val edges = Graph.coOccurrenceEdges(spark, sf0001).cache()
     try {

@@ -67,10 +67,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("doubled-corpus shift re-derives when the same path grows (stale memo = id collisions)") {
-    // the r12 shiftMemo hazard: one JVM, one path, corpus overwritten
-    // with larger ids — a memoized smaller shift would collide copy
-    // ids with real ids downstream. The memo key includes the input
-    // file listing, so the overwrite must produce a fresh shift.
+    // the r12 shift-memo hazard: one JVM, one path, corpus overwritten
+    // with larger ids — a remembered smaller shift would collide copy
+    // ids with real ids downstream. The probe reads the corpus as it
+    // is now, so the overwrite must produce a fresh shift.
     val dir = java.nio.file.Files.createTempDirectory("shiftmemo").toString
     try {
       Seq((0L, "alpha"), (50L, "beta")).toDF("doc_id", "text")

@@ -9,11 +9,6 @@ import graft.ops.{Dedup, Graph, Pipeline, Similarity}
   * (distribution direction, recall bounds, spectral improvement). */
 class QualityOpsR5bSpec extends SparkSpec {
 
-  override def withFixture(test: NoArgTest) = {
-    try super.withFixture(test)
-    finally { Caches.releaseAll(); spark.catalog.clearCache() }
-  }
-
   test("neighborJaccard similarities are in (0, 1] and pairs are canonical") {
     val r = Graph.neighborJaccard(spark, sf0001)
     val bad = r.filter(col("jaccard") <= 0 || col("jaccard") > 1 ||

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — sbt
@@ -22,4 +23,10 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** A test's queries ran on its thread, so that thread releases their
+    * tracked caches; clearCache drops what the test cached itself. */
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally { Caches.releaseAll(); spark.catalog.clearCache() }
 }
