@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Backfill, SiriSnapshotEtl}
@@ -20,6 +20,10 @@ import graft.sources.SnapshotStorage.{readRaw, writeTables}
   * (yyyy-MM-dd); both are OPTIONAL on the backfill commands and
   * default to today / today−num-days (reference cli.py FROM_DATE/
   * TO_DATE via common.py parse_date_str).
+  *
+  * Commands that skip loaded snapshots use [[graft.etl.Backfill]]'s
+  * rule (a snapshot needs loading unless its status is `loaded`), and
+  * `update-pending-snapshots` writes its status rows.
   *
   * Raw snapshots are JSON files named by snapshot id (the reference's
   * storage layout, one document per minute); <rawDir>/YYYY/MM/DD/HH/MM.json.
@@ -103,6 +107,18 @@ object Cli {
     (range, ndPairs, rest0.drop(range.length))
   }
 
+  /** An optional `<fromId> <toId>` pair: none or both. Anything else
+    * exits 2 — a typo'd range must NOT silently process everything. */
+  private def optionalRange(args: List[String]): Option[(String, String)] = args match {
+    case from :: to :: Nil => Some((from, to))
+    case Nil => None
+    case other =>
+      System.err.println(s"expected [<fromId> <toId>], got: $other"); sys.exit(2)
+  }
+
+  private def inRangeOf(args: List[String]): Column =
+    optionalRange(args).fold(lit(true))(r => col("snapshot_id").between(r._1, r._2))
+
   def main(args: Array[String]): Unit = {
     // stop only a session we created — embedding callers (tests, other
     // jobs) keep theirs alive across commands
@@ -136,36 +152,21 @@ object Cli {
       // chronologically so the range is a lexicographic between)
       case "process-snapshots" :: rawDir :: outDir :: rest
           if rest.forall(a => a == "--only-missing" || !a.startsWith("--")) =>
-        var raw = readRaw(spark, rawDir)
-        rest.filterNot(_ == "--only-missing") match {
-          case from :: to :: Nil =>
-            raw = raw.filter(col("snapshot_id").between(from, to))
-          case Nil => ()
-          case other =>
-            // a typo'd range must NOT silently process the whole raw dir
-            System.err.println(s"expected [<fromId> <toId>], got: $other"); sys.exit(2)
-        }
-        if (rest.contains("--only-missing")) {
-          val loaded =
-            try Some(spark.read.parquet(s"$outDir/siri_snapshots")
-              .filter(col("etl_status") === "loaded").select("snapshot_id"))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
-          loaded.foreach(l => raw = raw.join(l, Seq("snapshot_id"), "left_anti"))
-        }
+        val inRange =
+          readRaw(spark, rawDir).filter(inRangeOf(rest.filterNot(_ == "--only-missing")))
+        val raw =
+          if (rest.contains("--only-missing"))
+            Backfill.needsLoading(inRange, Backfill.readStatus(spark, s"$outDir/siri_snapshots"))
+          else inRange
         writeTables(SiriSnapshotEtl.run(raw), outDir)
       case "process-snapshot" :: snapshotId :: rawDir :: outDir :: rest
           if rest.isEmpty || rest == List("--force-reload") =>
         // reference process_snapshot (process_snapshot.py:398): skip a
         // snapshot already loaded unless --force-reload; reprocessing is
         // idempotent (facts dynamic-overwrite their own partition)
-        val force = rest.nonEmpty
-        val statusPath = s"$outDir/siri_snapshots"
-        val alreadyLoaded = !force && {
-          try spark.read.parquet(statusPath)
-            .filter(col("snapshot_id") === snapshotId && col("etl_status") === "loaded")
-            .limit(1).count() > 0
-          catch { case _: org.apache.spark.sql.AnalysisException => false }
-        }
+        val alreadyLoaded = rest.isEmpty && Backfill.needsLoading(
+          spark.range(1).select(lit(snapshotId).as("snapshot_id")),
+          Backfill.readStatus(spark, s"$outDir/siri_snapshots")).isEmpty
         if (alreadyLoaded) println(s"snapshot $snapshotId already loaded, skipping")
         else writeTables(SiriSnapshotEtl.run(
           readRaw(spark, rawDir).filter(col("snapshot_id") === snapshotId)), outDir)
@@ -175,14 +176,9 @@ object Cli {
       // idempotent unless --force re-copies existing files)
       case "copy-snapshots" :: srcRoot :: dstRoot :: rest
           if rest.forall(a => a == "--force" || !a.startsWith("--")) =>
-        val (fromId, toId) = rest.filterNot(_ == "--force") match {
-          case from :: to :: Nil => (Some(from), Some(to))
-          case Nil => (None, None)
-          case other =>
-            System.err.println(s"expected [<fromId> <toId>], got: $other"); sys.exit(2)
-        }
+        val range = optionalRange(rest.filterNot(_ == "--force"))
         val n = SnapshotStorage.copySnapshots(spark, srcRoot, dstRoot,
-          fromId, toId, force = rest.contains("--force"))
+          range.map(_._1), range.map(_._2), force = rest.contains("--force"))
         println(s"copied $n snapshots")
       case "start-daemon" :: rawDir :: outDir :: checkpointDir :: Nil =>
         // start_process_new_snapshots_daemon: minute-granular tail of the
@@ -198,15 +194,14 @@ object Cli {
         val (rangeArgs, numDays, rest) = splitRangeArgs(rawArgs)
         val (from, to) = resolveRange(rangeArgs, numDays)
         val statusParquet = rest.headOption.getOrElse(s"${Config.etlRoot}/siri_snapshots")
-        val status = spark.read.parquet(statusParquet)
-        val pending = Backfill.pendingSnapshots(spark, from, to, status)
+        val pending = Backfill.pendingSnapshots(spark, from, to,
+          Backfill.readStatus(spark, statusParquet))
         rest.headOption match {
           case Some(_) => // explicit flat status table: plain append
             pending.write.mode("append").parquet(statusParquet)
           case None =>
-            // the star's own siri_snapshots is (date, minute)-partitioned
-            // — append pending rows in the same leaf layout or the scan
-            // never sees them
+            // the star's siri_snapshots: pending rows go in the (date,
+            // minute) leaves that their snapshots' loads replace
             SnapshotStorage.withSnapshotPartitions(pending)
               .write.mode("append")
               .partitionBy("snapshot_date", "snapshot_minute")
@@ -221,23 +216,15 @@ object Cli {
           case s :: r :: o :: Nil => (s, r, o)
           case _ => (s"${Config.etlRoot}/siri_snapshots", Config.rawRoot, Config.etlRoot)
         }
-        val status = spark.read.parquet(statusParquet)
-        writeTables(Backfill.processBacklog(spark, from, to, status, readRaw(spark, rawDir)), outDir)
+        writeTables(Backfill.processBacklog(spark, from, to,
+          Backfill.readStatus(spark, statusParquet), readRaw(spark, rawDir)), outDir)
       // validate-snapshots <rawDir> [<fromId> <toId>] [--csv <path>]
       // (siri-etl-validate-snapshots DAG: range-bounded field-level
       // mismatch report, one row per mismatching field, CSV out)
       case "validate-snapshots" :: rawDir :: rest =>
         val csvOut = rest.dropWhile(_ != "--csv").drop(1).headOption
-        val range = rest.takeWhile(_ != "--csv")
-        var raw = readRaw(spark, rawDir)
-        range match {
-          case from :: to :: Nil =>
-            raw = raw.filter(col("snapshot_id").between(from, to))
-          case Nil => ()
-          case other =>
-            System.err.println(s"expected [<fromId> <toId>], got: $other"); sys.exit(2)
-        }
-        val r = SiriSnapshotEtl.run(raw)
+        val r = SiriSnapshotEtl.run(
+          readRaw(spark, rawDir).filter(inRangeOf(rest.takeWhile(_ != "--csv"))))
         val bad = SiriSnapshotEtl.validateFields(r.visits, r.vehicleLocations,
           r.rideStops, r.rides, r.stops)
         val n = bad.count()

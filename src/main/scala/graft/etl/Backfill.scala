@@ -1,13 +1,15 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Backlog management: the reference's update_pending_snapshots.py
-  * (enumerate every available snapshot id, anti-join against the
-  * siri_snapshot status table, insert the missing ones as `pending`)
-  * and parallel_process_old_missing_snapshots.py (chop a date range
-  * into chunks and process them in parallel workers).
+/** The siri_snapshot lifecycle (update_pending_snapshots.py,
+  * parallel_process_old_missing_snapshots.py), owned here. A status row
+  * is snapshot_id, the visits parsed and failed, the keys each dimension
+  * added, etl_status (`pending`, `loaded` or `error`) and error; a
+  * pending row has null counts and error. One rule: a snapshot needs
+  * loading unless its status is `loaded` — untracked, pending and
+  * errored snapshots alike.
   *
   * Spark-first: the expected id series comes from `sequence` (no
   * driver loop over minutes — the reference iterates one minute at a
@@ -19,6 +21,39 @@ import org.apache.spark.sql.functions._
 object Backfill {
 
   private val SnapshotIdFmt = "yyyy/MM/dd/HH/mm"
+
+  private[etl] val Parsed = "num_successful_parse_vehicle_locations"
+  private[etl] val Failed = "num_failed_parse_vehicle_locations"
+  private[etl] def added(d: SiriSnapshotEtl.Dim): String = s"num_added_${d.table}"
+
+  /** A status row, column by column; `count` gives each count's value. */
+  private def statusRow(count: String => Column, status: Column, error: Column): Seq[Column] =
+    col("snapshot_id") +: (Seq(Parsed, Failed) ++ SiriSnapshotEtl.dims.map(added))
+      .map(c => count(c).cast("long").as(c)) :+ status.as("etl_status") :+ error.as("error")
+
+  /** Per-snapshot counts → status rows (process_snapshot.py:289,302):
+    * a snapshot with nothing but failures (e.g. an unparseable
+    * document) is `error` with a reason; a loaded one carries error=''
+    * even when some visits failed to parse. */
+  private[etl] def loadedOrError(counts: DataFrame): DataFrame = {
+    val loaded = col(Parsed) > 0 || col(Failed) === 0
+    counts.select(statusRow(col, when(loaded, lit("loaded")).otherwise(lit("error")),
+      when(loaded, lit("")).otherwise(lit("no parseable visits"))): _*)
+  }
+
+  private def pendingRows(ids: DataFrame): DataFrame =
+    ids.select(statusRow(_ => lit(null), lit("pending"), lit(null).cast("string")): _*)
+
+  /** The status table at `path`, empty while nothing is stored there. */
+  private[graft] def readStatus(spark: SparkSession, path: String): DataFrame =
+    try spark.read.parquet(path)
+    catch { case _: AnalysisException =>
+      pendingRows(spark.emptyDataFrame.select(lit("").as("snapshot_id"))) }
+
+  /** The rows of `snapshots` whose snapshot is not `loaded`. */
+  private[graft] def needsLoading(snapshots: DataFrame, statusTable: DataFrame): DataFrame =
+    snapshots.join(statusTable.filter(col("etl_status") === "loaded").select("snapshot_id"),
+      Seq("snapshot_id"), "left_anti")
 
   /** Every expected snapshot id in [from, to], one per minute —
     * generated distributed, not on the driver. */
@@ -33,26 +68,19 @@ object Backfill {
   }
 
   /** update_pending_snapshots: expected ids not yet present in the
-    * status table become `pending` rows (idempotent — ids already
-    * tracked are untouched). `statusTable` needs (snapshot_id,
-    * etl_status). */
+    * status table become `pending` status rows (idempotent — ids
+    * already tracked are untouched). `statusTable` needs snapshot_id. */
   def pendingSnapshots(spark: SparkSession, fromId: String, toId: String,
       statusTable: DataFrame): DataFrame =
-    expectedSnapshotIds(spark, fromId, toId)
-      .join(statusTable.select("snapshot_id"), Seq("snapshot_id"), "left_anti")
-      .withColumn("etl_status", lit("pending"))
+    pendingRows(expectedSnapshotIds(spark, fromId, toId)
+      .join(statusTable.select("snapshot_id"), Seq("snapshot_id"), "left_anti"))
 
-  /** process_old_missing_snapshots: run the batch ETL over exactly the
-    * snapshots that are pending or errored (reference reprocesses
-    * error-status snapshots under force_reload,
-    * process_snapshot.py:367). `raw` carries (snapshot_id, json) for
-    * whatever snapshot payloads exist. */
+  /** process_old_missing_snapshots: run the batch ETL over the
+    * snapshots of [from, to] that need loading. `raw` carries
+    * (snapshot_id, json) for whatever snapshot payloads exist. */
   def processBacklog(spark: SparkSession, fromId: String, toId: String,
-      statusTable: DataFrame, raw: DataFrame): SiriSnapshotEtl.EtlResult = {
-    val todo = pendingSnapshots(spark, fromId, toId, statusTable)
-      .select("snapshot_id")
-      .unionAll(statusTable.filter(col("etl_status") === "error").select("snapshot_id"))
-      .distinct()
-    SiriSnapshotEtl.run(raw.join(broadcast(todo), Seq("snapshot_id")))
-  }
+      statusTable: DataFrame, raw: DataFrame): SiriSnapshotEtl.EtlResult =
+    SiriSnapshotEtl.run(raw.join(
+      broadcast(needsLoading(expectedSnapshotIds(spark, fromId, toId), statusTable)),
+      Seq("snapshot_id")))
 }

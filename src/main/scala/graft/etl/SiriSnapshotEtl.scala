@@ -159,8 +159,9 @@ object SiriSnapshotEtl {
         col("lon"), col("lat"), col("bearing"), col("velocity"),
         col("distance_from_journey_start"))
 
-  /** Per-snapshot lifecycle stats (the siri_snapshot row the reference
-    * maintains: loaded status, parse counts, added-per-dim counts).
+  /** Per-snapshot lifecycle stats: the siri_snapshot status row the
+    * reference maintains (parse counts, added-per-dim counts, `loaded`
+    * or `error`), in [[Backfill]]'s status-row shape.
     *
     * `num_added_<table>` counts the keys first seen (least snapshot_id)
     * IN THIS BATCH, not the keys new to the star: the batch knows
@@ -170,26 +171,15 @@ object SiriSnapshotEtl {
     * created. */
   def snapshotStats(visits: DataFrame): DataFrame = {
     val perSnapshot = visits.groupBy(col("snapshot_id")).agg(
-      sum(when(col("parse_ok"), 1L).otherwise(0L)).as("num_successful_parse_vehicle_locations"),
-      sum(when(col("parse_ok"), 0L).otherwise(1L)).as("num_failed_parse_vehicle_locations"))
+      sum(when(col("parse_ok"), 1L).otherwise(0L)).as(Backfill.Parsed),
+      sum(when(col("parse_ok"), 0L).otherwise(1L)).as(Backfill.Failed))
     val ok = okVisits(visits)
     val withAdded = dims.foldLeft(perSnapshot) { (stats, d) =>
       val added = ok.groupBy(d.key.map(col): _*).agg(min(col("snapshot_id")).as("snapshot_id"))
-        .groupBy(col("snapshot_id")).agg(count(lit(1)).as(s"num_added_${d.table}"))
+        .groupBy(col("snapshot_id")).agg(count(lit(1)).as(Backfill.added(d)))
       stats.join(added, Seq("snapshot_id"), "left")
     }
-    withAdded.na.fill(0L)
-      // reference status semantics (process_snapshot.py:289,302): a
-      // snapshot that produced nothing but failures (e.g. an unparseable
-      // document) is `error` with a reason, and re-enters the backlog
-      // (Backfill.processBacklog picks error-status ids up); a loaded
-      // snapshot carries error='' even when some visits failed to parse.
-      .withColumn("etl_status",
-        when(col("num_successful_parse_vehicle_locations") > 0 ||
-          col("num_failed_parse_vehicle_locations") === 0, lit("loaded"))
-          .otherwise(lit("error")))
-      .withColumn("error",
-        when(col("etl_status") === "error", lit("no parseable visits")).otherwise(lit("")))
+    Backfill.loadedOrError(withAdded.na.fill(0L))
   }
 
   /** Reconciliation (validate_snapshots.py): join the star back together

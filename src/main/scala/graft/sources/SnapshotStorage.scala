@@ -48,7 +48,8 @@ object SnapshotStorage {
             col("value").as("json")))
       else None
     val brPart =
-      if (hasGlob(spark, brPat)) Some(readRawBrotli(spark, brPat)) else None
+      if (hasGlob(spark, brPat)) Some(decodeBrotli(spark.read.format("binaryFile").load(brPat)))
+      else None
     (jsonPart, brPart) match {
       case (None, None) =>
         import spark.implicits._
@@ -65,12 +66,6 @@ object SnapshotStorage {
           Seq("snapshot_id"), "left_anti"))
     }
   }
-
-  /** Distributed `.br` snapshot read: binaryFile rows decoded per
-    * partition — the Spark-native shape of the reference's per-file
-    * `brotli -d` subprocess loop. */
-  private def readRawBrotli(spark: SparkSession, pattern: String): DataFrame =
-    decodeBrotli(spark.read.format("binaryFile").load(pattern))
 
   /** Streaming read of the same layout (json-lines documents carrying
     * snapshot_id + json, as the daemon's requester writes them). */
@@ -151,10 +146,8 @@ object SnapshotStorage {
     * batch's snapshots that now have no rows here — are deleted after
     * it. The mode is this write's option, never the session's conf,
     * which a concurrent writer on the same session would see. */
-  private def overwriteSnapshots(df: DataFrame, path: String, emptied: Seq[Row],
-      options: (String, String)*): Unit = {
+  private def overwriteSnapshots(df: DataFrame, path: String, emptied: Seq[Row]): Unit = {
     df.write.mode(SaveMode.Overwrite)
-      .options(options.toMap)
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "zstd")
       .partitionBy("snapshot_date", "snapshot_minute")
@@ -173,7 +166,9 @@ object SnapshotStorage {
     * snapshots' leaves ([[overwriteSnapshots]]): reprocessing a
     * snapshot leaves only its new rows in every table, and no other
     * snapshot's. Dims append unseen keys only. The status rows go
-    * last, so a snapshot reads `loaded` only once its rows are in. */
+    * last ([[graft.etl.Backfill]]'s status rows, replacing a pending
+    * one), so a snapshot reads `loaded` — the one status that keeps it
+    * from being loaded again — only once its rows are in. */
   def writeTables(r: SiriSnapshotEtl.EtlResult, outDir: String): Unit = {
     val spark = r.routes.sparkSession
     // every output table derives from the SAME parsed-visits relation,
@@ -201,17 +196,14 @@ object SnapshotStorage {
       val stats = withSnapshotPartitions(r.snapshotStats)
       val status = stats.collect().toSeq
       // facts: zstd (scan-bound table, best ratio at similar decode
-      // speed), a parquet bloom filter on the surrogate join key
-      // (validation joins probe it point-wise), and rows sorted by
-      // recorded time within each file so time-range scans prune on
-      // page min/max instead of reading whole row groups
+      // speed), rows sorted by recorded time in each file so time-range
+      // scans prune on page min/max instead of reading whole row groups
       debugTime("write-vehicle-locations", "outDir" -> outDir) {
         overwriteSnapshots(withSnapshotPartitions(r.vehicleLocations)
           .sortWithinPartitions(col("snapshot_date"), col("snapshot_minute"),
             col("recorded_at_time")),
           s"$outDir/siri_vehicle_locations",
-          status.filter(_.getAs[Long]("num_successful_parse_vehicle_locations") == 0),
-          "parquet.bloom.filter.enabled#siri_ride_stop_id" -> "true")
+          status.filter(_.getAs[Long]("num_successful_parse_vehicle_locations") == 0))
       }
       debugTime("write-stats-and-errors", "outDir" -> outDir) {
         overwriteSnapshots(withSnapshotPartitions(r.parseErrors), s"$outDir/parse_errors",

@@ -123,6 +123,25 @@ class SnapshotStorageSpec extends SparkSpec {
     assert(rowsPerSnapshot(star, "siri_snapshots") == Map(x -> 1L, y -> 1L))
   }
 
+  test("fact files carry no parquet bloom filter") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val star = java.nio.file.Files.createTempDirectory("nobloom").toFile.getAbsolutePath
+    load(star, "2023/03/10/08/01" -> SiriFixtures.snapA, "2023/03/10/08/02" -> SiriFixtures.snapB)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = spark.read.parquet(s"$star/siri_vehicle_locations").inputFiles.toSeq
+    val chunks = files.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      finally reader.close()
+    }
+    assert(chunks.nonEmpty)
+    val filtered = chunks.filter(_.getBloomFilterOffset >= 0).map(_.getPath.toDotString)
+    assert(filtered.isEmpty, s"bloom filters on: ${filtered.distinct}")
+  }
+
   test("writeTables leaves the session's partitionOverwriteMode unset") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.unset(key)

@@ -159,6 +159,55 @@ class CliSpec extends SparkSpec {
       ("2023/03/01/08/15", "2023/03/01/09/00"))
   }
 
+  /** Runs `body` with the raw root and the star at the Config defaults
+    * the zero-path backfill commands resolve. */
+  private def withRoots[T](raw: String, star: String)(body: => T): T = {
+    val prev = Config.overrides
+    Config.overrides = prev ++ Map("GRAFT_RAW_ROOTPATH" -> raw, "GRAFT_ETL_ROOTPATH" -> star)
+    try body finally Config.overrides = prev
+  }
+
+  test("update-pending-snapshots then process-old-missing-snapshots loads every pending snapshot") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("pendraw").toString
+    val star = Files.createTempDirectory("pendstar").toString
+    val ids = Seq("00", "01", "02").map(m => s"2023/03/10/08/$m")
+    ids.zip(Seq(SiriFixtures.snapA, SiriFixtures.snapB, SiriFixtures.snapA))
+      .foreach { case (id, doc) => writeRaw(root, id, doc) }
+    Cli.main(Array("process-snapshots", root, star, ids(1), ids(1)))
+    withRoots(root, star) {
+      Cli.main(Array("update-pending-snapshots", ids(0), ids(2)))
+      Cli.main(Array("process-old-missing-snapshots", ids(0), ids(2)))
+    }
+    val status = spark.read.parquet(s"$star/siri_snapshots")
+      .select("snapshot_id", "etl_status").as[(String, String)].collect().sorted
+    assert(status.toSeq == ids.map(_ -> "loaded"))
+    val facts = spark.read.parquet(s"$star/siri_vehicle_locations")
+      .groupBy("snapshot_id").count().as[(String, Long)].collect().toMap
+    // 08/01 was loaded before the backfill: its facts are not doubled
+    assert(facts == Map(ids(0) -> 3L, ids(1) -> 2L, ids(2) -> 3L))
+  }
+
+  test("pending rows keep every column of the star's status table readable") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("pendraw2").toString
+    val star = Files.createTempDirectory("pendstar2").toString
+    val loaded = "2023/03/10/08/05"
+    writeRaw(root, loaded, SiriFixtures.snapA)
+    Cli.main(Array("process-snapshots", root, star))
+    def row() = spark.read.parquet(s"$star/siri_snapshots")
+      .filter($"snapshot_id" === loaded).collect().toSeq
+    val before = row()
+    // the pending leaves 08/00..08/04 sort before the loaded 08/05
+    withRoots(root, star)(Cli.main(Array("update-pending-snapshots", "2023/03/10/08/00", loaded)))
+    val status = spark.read.parquet(s"$star/siri_snapshots")
+    val pending = status.filter($"etl_status" === "pending")
+      .select("num_successful_parse_vehicle_locations", "num_failed_parse_vehicle_locations",
+        "error").collect()
+    assert(pending.length == 5 && pending.forall(r => (0 until 3).forall(r.isNullAt)))
+    assert(row() == before)
+  }
+
   test("update-pending-snapshots accepts date args + explicit status path") {
     val statusDir = Files.createTempDirectory("clistatus").toString + "/status"
     import spark.implicits._
