@@ -32,12 +32,10 @@ object Cli {
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    SparkSession.builder()
+    GraftSession.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 

@@ -24,10 +24,14 @@ object SnapshotStorage {
 
   private val idFromPath = raw"(\d{4}/\d{2}/\d{2}/\d{2}/\d{2})\.(json|br)"
 
-  private def hasGlob(spark: SparkSession, pattern: String): Boolean = {
+  /** The files `pattern` matches, globbed once here. Spark reads them as
+    * plain paths: handed the glob itself, it globs again and first probes
+    * the glob string for a streaming-sink metadata directory, which logs
+    * a `FileNotFoundException` WARN with its stack trace on every read. */
+  private def matching(spark: SparkSession, pattern: String): Seq[String] = {
     val p = new Path(pattern)
     Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
-      .exists(_.nonEmpty)
+      .fold(Seq.empty[String])(_.toSeq.map(_.getPath.toString))
   }
 
   /** Batch read of every raw snapshot under `rootDir` — both plain
@@ -38,17 +42,17 @@ object SnapshotStorage {
     * decoded IN THE MAPPER by [[Brotli.decompress]] (pure JVM, RFC
     * 7932), so decompression scales with executors, not the driver. */
   def readRaw(spark: SparkSession, rootDir: String): DataFrame = {
-    val jsonPat = s"$rootDir/*/*/*/*/*.json"
-    val brPat = s"$rootDir/*/*/*/*/*.br"
+    val jsonFiles = matching(spark, s"$rootDir/*/*/*/*/*.json")
+    val brFiles = matching(spark, s"$rootDir/*/*/*/*/*.br")
     val jsonPart =
-      if (hasGlob(spark, jsonPat))
-        Some(spark.read.option("wholetext", "true").text(jsonPat)
+      if (jsonFiles.nonEmpty)
+        Some(spark.read.option("wholetext", "true").text(jsonFiles: _*)
           .select(
             regexp_extract(input_file_name(), idFromPath, 1).as("snapshot_id"),
             col("value").as("json")))
       else None
     val brPart =
-      if (hasGlob(spark, brPat)) Some(decodeBrotli(spark.read.format("binaryFile").load(brPat)))
+      if (brFiles.nonEmpty) Some(decodeBrotli(spark.read.format("binaryFile").load(brFiles: _*)))
       else None
     (jsonPart, brPart) match {
       case (None, None) =>

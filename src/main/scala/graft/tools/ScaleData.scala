@@ -45,11 +45,9 @@ object ScaleData {
     require(f >= 1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -108,6 +108,37 @@ class BrotliIngestSpec extends SparkSpec {
     assert(e.columns.toSeq == Seq("snapshot_id", "json") && e.count() == 0)
   }
 
+  test("readRaw on a .br tree logs no metadata-directory WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val root = Files.createTempDirectory("brwarn").toString
+    writeBr(root, "2023/03/10/08/01", SiriFixtures.snapA)
+    writeBr(root, "2023/03/10/08/02", SiriFixtures.snapB)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("brwarn", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // the suite logs at ERROR; capture WARN for the read only
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    val level = rootLogger.getLevel
+    rootLogger.addAppender(capture, Level.WARN, null)
+    rootLogger.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    try assert(SnapshotStorage.readRaw(spark, root).count() == 2)
+    finally {
+      rootLogger.removeAppender("brwarn")
+      rootLogger.setLevel(level)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val probe = warnings.toArray.map(_.toString).filter(_.contains("Assume no metadata directory"))
+    assert(probe.isEmpty, probe.mkString("\n"))
+  }
+
   test("a minute present as BOTH .json and .br yields ONE row — .json wins") {
     val root = Files.createTempDirectory("brdup").toString
     // same minute in both formats, with DIFFERENT payloads so the

@@ -122,6 +122,22 @@ class SiriEtlSpec extends SparkSpec {
     }
   }
 
+  test("a repeated SIRI batch compiles nothing: the plans of a batch fit the codegen cache") {
+    import graft.sources.SnapshotStorage
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val star = java.nio.file.Files.createTempDirectory("codegen").toString
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // three same-shape one-snapshot batches, as the daemon appends them;
+    // the first creates the star, the second is the first append
+    val runs = Seq("2023/03/10/08/11", "2023/03/10/08/12", "2023/03/10/08/13").map { id =>
+      val before = compiles
+      SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw(id -> SiriFixtures.snapA)), star)
+      compiles - before
+    }
+    assert(runs.last == 0, s"units compiled per batch: ${runs.mkString(", ")}")
+    assert(spark.read.parquet(s"$star/siri_vehicle_locations").count() == 9)
+  }
+
   test("ride keeps scheduled_start_time of first sighting") {
     val mixed = raw("2023/03/10/08/01" -> SiriFixtures.snapA, "2023/03/10/08/02" -> SiriFixtures.snapB)
     val rides = SiriSnapshotEtl.rides(SiriSnapshotEtl.parseVisits(mixed))

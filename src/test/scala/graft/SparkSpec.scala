@@ -8,12 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * forks a single test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.configure(SparkSession.builder())
       .master("local[4]")
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
