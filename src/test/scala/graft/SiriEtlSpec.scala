@@ -129,9 +129,10 @@ class SiriEtlSpec extends SparkSpec {
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // same-shape one-snapshot batches, as the daemon appends them; the
     // first creates the star. With Spark's 100-entry cache every batch
-    // recompiled 100+ units. AQE can re-plan one batch differently when
-    // its stages finish in another order (a loaded box once gave 0, 0, 8),
-    // so one repeated batch, not every one, must compile nothing.
+    // recompiled 100+ units. A repeated batch can still compile a few new
+    // units now and then (a loaded test run once gave 0, 0, 8; perfbench
+    // sees it on a few batches too), so one repeated batch, not every
+    // one, must compile nothing.
     val runs = (11 to 14).map { minute =>
       val before = compiles
       SnapshotStorage.writeTables(
