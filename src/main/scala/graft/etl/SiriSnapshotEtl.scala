@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    ([[Dim]]); a batch builds its distinct keys, surrogate =
   *    xxhash64(natural key) so ids need no global coordination at
   *    100 TB (SURVEY.md §5), and [[graft.sources.SnapshotStorage.writeTables]]
-  *    appends only the keys the stored dimension lacks.
+  *    appends only the keys its [[graft.sources.DimIndex]] lacks.
   *  - snapshot lifecycle stats (update_siri_snapshot_loaded,
   *    process_snapshot.py:302): per-snapshot success/fail counts and
   *    per-dimension added counts.
@@ -159,28 +159,41 @@ object SiriSnapshotEtl {
         col("lon"), col("lat"), col("bearing"), col("velocity"),
         col("distance_from_journey_start"))
 
+  /** The keys pass: one row per distinct dimension key of the batch —
+    * `dim` (the dimension's table), `id` (its surrogate) and `snapshot_id`
+    * (the least snapshot that saw it) — from one aggregate over the
+    * parsed visits. */
+  private[graft] def firstSightings(visits: DataFrame): DataFrame =
+    okVisits(visits)
+      .select(col("snapshot_id"), explode(array(dims.map(d =>
+        struct(lit(d.table).as("dim"), d.surrogate.as("id"))): _*)).as("key"))
+      .groupBy(col("key.dim").as("dim"), col("key.id").as("id"))
+      .agg(min(col("snapshot_id")).as("snapshot_id"))
+
   /** Per-snapshot lifecycle stats: the siri_snapshot status row the
     * reference maintains (parse counts, added-per-dim counts, `loaded`
     * or `error`), in [[Backfill]]'s status-row shape.
     *
-    * `num_added_<table>` counts the keys first seen (least snapshot_id)
-    * IN THIS BATCH, not the keys new to the star: the batch knows
-    * nothing of the star it is written into. A one-snapshot batch (the
-    * daemon's usual micro-batch) therefore counts every key it sees,
-    * where the reference's ObjectsMaker counts only the rows it
-    * created. */
-  def snapshotStats(visits: DataFrame): DataFrame = {
+    * `num_added_<table>` counts the rows of `added` — (dim, id,
+    * snapshot_id) as [[firstSightings]] yields them — per snapshot.
+    * [[graft.sources.SnapshotStorage.writeTables]] passes every key of the
+    * batch, so the counts are the keys first seen IN THIS BATCH, not the
+    * keys new to the star: a one-snapshot batch (the daemon's usual
+    * micro-batch) counts every key it sees, where the reference's
+    * ObjectsMaker counts only the rows it created. */
+  def snapshotStats(visits: DataFrame, added: DataFrame): DataFrame = {
     val perSnapshot = visits.groupBy(col("snapshot_id")).agg(
       sum(when(col("parse_ok"), 1L).otherwise(0L)).as(Backfill.Parsed),
       sum(when(col("parse_ok"), 0L).otherwise(1L)).as(Backfill.Failed))
-    val ok = okVisits(visits)
-    val withAdded = dims.foldLeft(perSnapshot) { (stats, d) =>
-      val added = ok.groupBy(d.key.map(col): _*).agg(min(col("snapshot_id")).as("snapshot_id"))
-        .groupBy(col("snapshot_id")).agg(count(lit(1)).as(Backfill.added(d)))
-      stats.join(added, Seq("snapshot_id"), "left")
-    }
-    Backfill.loadedOrError(withAdded.na.fill(0L))
+    val counts = dims.map(d => sum(when(col("dim") === d.table, 1L).otherwise(0L)).as(Backfill.added(d)))
+    val perDim = added.groupBy(col("snapshot_id")).agg(counts.head, counts.tail: _*)
+    Backfill.loadedOrError(perSnapshot.join(perDim, Seq("snapshot_id"), "left").na.fill(0L))
   }
+
+  /** [[snapshotStats]] with every key of the batch added: the counts of
+    * the batch written into an empty star. */
+  def snapshotStats(visits: DataFrame): DataFrame =
+    snapshotStats(visits, firstSightings(visits))
 
   /** Reconciliation (validate_snapshots.py): join the star back together
     * and compare it against a fresh parse. Like validate_snapshots.py:100

@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -111,29 +114,6 @@ object SnapshotStorage {
       .toDF("snapshot_id", "json")
   }
 
-  /** One lock per dimension table, so writers in one JVM append to
-    * it one at a time: concurrent appends to one directory share its
-    * `_temporary` dir, which the first job to commit deletes under the
-    * others, and two racing get-or-creates would both append a key. */
-  private val dimLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** Dimension write: append-only. Only keys not already on disk are
-    * appended (left_anti), so dims monotonically grow and a backlog
-    * rerun never loses previously-created rows — the reference's
-    * get-or-create contract (ObjectsMaker, process_snapshot.py:51). */
-  private def appendNewDimKeys(dim: DataFrame, path: String, keys: Seq[String]): Unit = {
-    val spark = dim.sparkSession
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dimLocks.computeIfAbsent(fs.makeQualified(p).toString, _ => new AnyRef).synchronized {
-      val fresh =
-        if (fs.exists(p))
-          dim.join(spark.read.parquet(path).select(keys.map(col): _*), keys, "left_anti")
-        else dim
-      fresh.write.mode(SaveMode.Append).parquet(path)
-    }
-  }
-
   /** `2021/07/05/12/34` → (`2021-07-05`, `1234`): date partition for
     * scan pruning, minute partition so one snapshot = one leaf dir. */
   private[graft] def withSnapshotPartitions(df: DataFrame): DataFrame =
@@ -163,55 +143,100 @@ object SnapshotStorage {
         s"snapshot_minute=${s.getAs[String]("snapshot_minute")}"), true))
   }
 
-  /** Write an ETL result as the star schema — idempotently.
+  /** Run `writes` together, one thread each, and return their results
+    * once every one has ended. The threads are created here, by the
+    * caller, so they inherit its Spark local properties: the job group
+    * and SQL execution id that `StreamingQuery.stop()` cancels by. A
+    * failed write does not cut the wait short, so no sibling is still
+    * writing when the first failure is rethrown; neither does an
+    * interrupt of the caller, which is restored after. */
+  private def together[T](writes: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(writes.size)
+    try {
+      val pending = writes.map(w => pool.submit(new Callable[T] { def call(): T = w() }))
+      var interrupted = false
+      val ended = pending.map { f =>
+        var r: Option[Try[T]] = None
+        while (r.isEmpty)
+          try r = Some(Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
+          catch { case _: InterruptedException => interrupted = true }
+        r.get
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      ended.map(_.get)
+    } finally pool.shutdown()
+  }
+
+  /** Write an ETL result as the star schema — idempotently — building a
+    * fresh [[DimIndex]] of the star: one scan of each dimension's ids. */
+  def writeTables(r: SiriSnapshotEtl.EtlResult, outDir: String): Unit =
+    writeTables(r, new DimIndex(r.visits.sparkSession, outDir))
+
+  /** Write an ETL result into the star of `index`, whose dimension keys
+    * it reuses and extends.
     *
-    * Facts / parse errors / stats partition by (snapshot_date,
-    * snapshot_minute), and each batch overwrites exactly its own
-    * snapshots' leaves ([[overwriteSnapshots]]): reprocessing a
-    * snapshot leaves only its new rows in every table, and no other
-    * snapshot's. Dims append unseen keys only. The status rows go
-    * last ([[graft.etl.Backfill]]'s status rows, replacing a pending
-    * one), so a snapshot reads `loaded` — the one status that keeps it
-    * from being loaded again — only once its rows are in. */
-  def writeTables(r: SiriSnapshotEtl.EtlResult, outDir: String): Unit = {
-    val spark = r.routes.sparkSession
+    * One keys pass over the visits ([[SiriSnapshotEtl.firstSightings]],
+    * collected) gives every dimension key of the batch; each dimension
+    * appends the keys `index` lacks ([[DimIndex.append]]). Facts / parse
+    * errors / stats partition by (snapshot_date, snapshot_minute), and
+    * each batch overwrites exactly its own snapshots' leaves
+    * ([[overwriteSnapshots]]): reprocessing a snapshot leaves only its new
+    * rows in every table, and no other snapshot's.
+    *
+    * The writes run in three phases, the writes of a phase together: the
+    * four dimension appends, then facts with parse errors, then the
+    * status rows ([[graft.etl.Backfill]]'s status rows, replacing a
+    * pending one). So dims are in before any fact that references them,
+    * and a snapshot reads `loaded` — the one status that keeps it from
+    * being loaded again — only once its rows are in. */
+  private[graft] def writeTables(r: SiriSnapshotEtl.EtlResult, index: DimIndex): Unit = {
+    val spark = r.visits.sparkSession
+    import spark.implicits._
+    val outDir = index.outDir
     // every output table derives from the SAME parsed-visits relation,
-    // and each write below is its own Spark action — uncached, the ~8
+    // and each write below is its own Spark action — uncached, the
     // actions would each re-read AND re-decode/re-parse the raw
     // snapshot source (measured: the .br drain spends most of its wall
     // re-decoding brotli per table). Pin visits for the duration of
     // the writes; MEMORY_AND_DISK because a backlog drain's mega-batch
     // may exceed executor memory — a spilled cache still beats eight
-    // decodes. Unpersisted in finally: the daemon calls this per
-    // micro-batch and must not accumulate cache blocks.
+    // decodes. Unpersisted in finally, after every write has ended: the
+    // daemon calls this per micro-batch and must not accumulate cache
+    // blocks.
     r.visits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // per-stage timed sections on the batch path (reference logs.py
-    // debug_time around each process_snapshot phase) — each section
-    // wraps the Spark ACTION that materializes that table
+    // debug_time around each process_snapshot phase)
     import graft.Logs.debugTime
     try {
+      val sightings = SiriSnapshotEtl.firstSightings(r.visits).as[(String, Long, String)].collect()
       debugTime("write-dims", "outDir" -> outDir) {
-        SiriSnapshotEtl.dims.zip(Seq(r.routes, r.stops, r.rides, r.rideStops)).foreach {
-          case (d, dim) => appendNewDimKeys(dim, s"$outDir/${d.table}", d.storedKey)
-        }
+        together(SiriSnapshotEtl.dims.zip(Seq(r.routes, r.stops, r.rides, r.rideStops)).map {
+          case (d, rows) => () =>
+            index.append(d, rows, sightings.collect { case (t, id, _) if t == d.table => id })
+        })
       }
       // one status row per snapshot of the batch: it says which
       // snapshots now have no facts or no parse errors
-      val stats = withSnapshotPartitions(r.snapshotStats)
+      val stats = withSnapshotPartitions(SiriSnapshotEtl.snapshotStats(r.visits,
+        sightings.toSeq.toDF("dim", "id", "snapshot_id")))
       val status = stats.collect().toSeq
-      // facts: zstd (scan-bound table, best ratio at similar decode
-      // speed), rows sorted by recorded time in each file so time-range
-      // scans prune on page min/max instead of reading whole row groups
-      debugTime("write-vehicle-locations", "outDir" -> outDir) {
-        overwriteSnapshots(withSnapshotPartitions(r.vehicleLocations)
-          .sortWithinPartitions(col("snapshot_date"), col("snapshot_minute"),
-            col("recorded_at_time")),
-          s"$outDir/siri_vehicle_locations",
-          status.filter(_.getAs[Long]("num_successful_parse_vehicle_locations") == 0))
-      }
-      debugTime("write-stats-and-errors", "outDir" -> outDir) {
-        overwriteSnapshots(withSnapshotPartitions(r.parseErrors), s"$outDir/parse_errors",
-          status.filter(_.getAs[Long]("num_failed_parse_vehicle_locations") == 0))
+      together(Seq(
+        // facts: zstd (scan-bound table, best ratio at similar decode
+        // speed), rows sorted by recorded time in each file so
+        // time-range scans prune on page min/max instead of reading
+        // whole row groups
+        () => debugTime("write-vehicle-locations", "outDir" -> outDir) {
+          overwriteSnapshots(withSnapshotPartitions(r.vehicleLocations)
+            .sortWithinPartitions(col("snapshot_date"), col("snapshot_minute"),
+              col("recorded_at_time")),
+            s"$outDir/siri_vehicle_locations",
+            status.filter(_.getAs[Long]("num_successful_parse_vehicle_locations") == 0))
+        },
+        () => debugTime("write-parse-errors", "outDir" -> outDir) {
+          overwriteSnapshots(withSnapshotPartitions(r.parseErrors), s"$outDir/parse_errors",
+            status.filter(_.getAs[Long]("num_failed_parse_vehicle_locations") == 0))
+        }))
+      debugTime("write-stats", "outDir" -> outDir) {
         overwriteSnapshots(spark.createDataFrame(status.asJava, stats.schema),
           s"$outDir/siri_snapshots", Nil)
       }

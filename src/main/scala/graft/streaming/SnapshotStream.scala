@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.etl.SiriSnapshotEtl
-import graft.sources.SnapshotStorage
+import graft.sources.{DimIndex, SnapshotStorage}
 
 /** The reference's continuous daemon (process_new_snapshots +
   * start_process_new_snapshots_daemon, process_snapshot.py:485-547) as
@@ -42,17 +42,21 @@ object SnapshotStream {
     * each micro-batch runs the batch ETL and writes the star with
     * [[SnapshotStorage.writeTables]] — the batch path's own code, so a
     * retried batch rewrites its snapshots, it never doubles them. The
-    * checkpoint replaces the reference's last-loaded-snapshot
-    * bookkeeping; the shutdown hook is its GracefulKiller analogue:
-    * stop() interrupts the in-flight batch, and the idempotent sinks +
-    * checkpoint replay make the torn batch unobservable after restart
-    * (same end state as finish-then-stop). */
+    * query holds one [[graft.sources.DimIndex]] of the star and hands it
+    * to every batch, so a steady batch reads no dimension back: only the
+    * files another writer added. The checkpoint replaces the reference's
+    * last-loaded-snapshot bookkeeping; the shutdown hook is its
+    * GracefulKiller analogue: stop() interrupts the in-flight batch and
+    * cancels its jobs, and the idempotent sinks + checkpoint replay make
+    * the torn batch unobservable after restart (same end state as
+    * finish-then-stop). */
   private[graft] def start(raw: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger): StreamingQuery = {
     // per-batch timed sections accumulate across the daemon's lifetime
     // (reference logs.py debug_time_stats: the per-snapshot stats dict)
     // and surface under GRAFT_DEBUG when a batch runs slow
     val stats = new graft.Logs.Stats
+    val index = new DimIndex(raw.sparkSession, outDir)
     val q = raw
       .writeStream
       .option("checkpointLocation", checkpointDir)
@@ -60,7 +64,7 @@ object SnapshotStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.Logs.debugTimeStats("process-batch", stats,
             logIfMoreThanSeconds = Some(30.0), kv = Seq("batch_id" -> batchId.toString)) {
-          SnapshotStorage.writeTables(SiriSnapshotEtl.run(batch), outDir)
+          SnapshotStorage.writeTables(SiriSnapshotEtl.run(batch), index)
         }
       }
       .start()

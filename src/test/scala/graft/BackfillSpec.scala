@@ -164,6 +164,78 @@ class SnapshotStorageSpec extends SparkSpec {
       .map(m => s"2023/03/10/$m" -> 3L).toMap)
   }
 
+  private def dimFiles(star: String): Map[String, Set[String]] =
+    graft.etl.SiriSnapshotEtl.dims.map { d =>
+      d.table -> new java.io.File(s"$star/${d.table}").list().toSet
+    }.toMap
+
+  test("reloading an already-loaded snapshot adds no file to any dimension directory") {
+    val star = java.nio.file.Files.createTempDirectory("reloaddims").toFile.getAbsolutePath
+    load(star, "2023/03/10/08/01" -> SiriFixtures.snapA, "2023/03/10/08/02" -> SiriFixtures.snapB)
+    val before = dimFiles(star)
+    load(star, "2023/03/10/08/02" -> SiriFixtures.snapB)
+    assert(dimFiles(star) == before)
+  }
+
+  test("a daemon batch after another writer's append stores each key once") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.SnapshotStream
+    val dir = java.nio.file.Files.createTempDirectory("otherwriter").toFile.getAbsolutePath
+    def land(id: String, doc: String): Unit =
+      Seq((id, doc)).toDF("snapshot_id", "json").write.mode("append").json(s"$dir/raw")
+    land("2023/03/10/08/01", SiriFixtures.snapA)
+    val q = SnapshotStream.daemon(spark, s"$dir/raw", s"$dir/star", s"$dir/ckpt",
+      Trigger.ProcessingTime(0L))
+    try {
+      q.processAllAvailable()
+      // a writer outside the daemon's index appends snapB's new keys
+      load(s"$dir/star", "2023/03/10/08/02" -> SiriFixtures.snapB)
+      // and the daemon's next batch carries them again
+      land("2023/03/10/08/03", SiriFixtures.snapB)
+      q.processAllAvailable()
+    } finally { q.stop(); q.awaitTermination(60000) }
+    graft.etl.SiriSnapshotEtl.dims.foreach { d =>
+      val t = spark.read.parquet(s"$dir/star/${d.table}")
+      assert(t.select(d.storedKey.map(t.col): _*).distinct().count() == t.count(), d.table)
+    }
+    assert(spark.read.parquet(s"$dir/star/siri_routes").count() == 3)
+    assert(rowsPerSnapshot(s"$dir/star", "siri_vehicle_locations") == Map(
+      "2023/03/10/08/01" -> 3L, "2023/03/10/08/02" -> 2L, "2023/03/10/08/03" -> 2L))
+  }
+
+  test("a failed write leaves no job of writeTables running") {
+    val star = java.nio.file.Files.createTempDirectory("failedwrite").toFile.getAbsolutePath
+    // a plain file where one dimension's directory goes: its append fails
+    // while the other three run
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(star, "siri_stops"), "not a table")
+    intercept[Exception](load(star, "2023/03/10/08/01" -> SiriFixtures.snapA))
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
+  test("every job writeTables starts runs in the caller's job group") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val star = java.nio.file.Files.createTempDirectory("jobgroup").toFile.getAbsolutePath
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // StreamingQuery.stop() cancels a batch's jobs by this group
+      sc.setJobGroup("g", "writeTables")
+      try {
+        load(star, "2023/03/10/08/01" -> SiriFixtures.snapA)
+        load(star, "2023/03/10/08/02" -> SiriFixtures.snapB)
+      } finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(groups.size > 10 && groups.asScala.forall(_ == "g"), groups)
+  }
+
   test("writeTables is idempotent per snapshot: a backlog rerun never loses other partitions") {
     import graft.etl.SiriSnapshotEtl
     val outDir = java.nio.file.Files.createTempDirectory("star").toFile.getAbsolutePath

@@ -128,19 +128,24 @@ class SiriEtlSpec extends SparkSpec {
     val star = java.nio.file.Files.createTempDirectory("codegen").toString
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // same-shape one-snapshot batches, as the daemon appends them; the
-    // first creates the star. With Spark's 100-entry cache every batch
-    // recompiled 100+ units. A repeated batch can still compile a few new
-    // units now and then (a loaded test run once gave 0, 0, 8; perfbench
-    // sees it on a few batches too), so one repeated batch, not every
-    // one, must compile nothing.
+    // first creates the star. Each also carries one new route key, as a
+    // daemon batch carries new keys, so a plan that spliced a batch's keys
+    // in as literals would compile afresh every batch. With Spark's
+    // 100-entry cache every batch recompiled 100+ units. A repeated batch
+    // can still compile a few new units now and then (a loaded test run
+    // once gave 0, 0, 8; perfbench sees it on a few batches too), so one
+    // repeated batch, not every one, must compile nothing.
     val runs = (11 to 14).map { minute =>
+      val doc = SiriFixtures.snapA.replace("\"MonitoredStopVisit\": [",
+        "\"MonitoredStopVisit\": [" +
+          SiriFixtures.visit(100 + minute, 25, "300001", "veh-7", 32043, 1, 34.7, 31.8) + ",")
       val before = compiles
-      SnapshotStorage.writeTables(
-        SiriSnapshotEtl.run(raw(s"2023/03/10/08/$minute" -> SiriFixtures.snapA)), star)
+      SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw(s"2023/03/10/08/$minute" -> doc)), star)
       compiles - before
     }
     assert(runs.tail.min == 0, s"units compiled per batch: ${runs.mkString(", ")}")
-    assert(spark.read.parquet(s"$star/siri_vehicle_locations").count() == 12)
+    assert(spark.read.parquet(s"$star/siri_vehicle_locations").count() == 16)
+    assert(spark.read.parquet(s"$star/siri_routes").count() == 6)
   }
 
   test("ride keeps scheduled_start_time of first sighting") {
