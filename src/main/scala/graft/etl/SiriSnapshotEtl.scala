@@ -176,11 +176,11 @@ object SiriSnapshotEtl {
     *
     * `num_added_<table>` counts the rows of `added` — (dim, id,
     * snapshot_id) as [[firstSightings]] yields them — per snapshot.
-    * [[graft.sources.SnapshotStorage.writeTables]] passes every key of the
-    * batch, so the counts are the keys first seen IN THIS BATCH, not the
-    * keys new to the star: a one-snapshot batch (the daemon's usual
-    * micro-batch) counts every key it sees, where the reference's
-    * ObjectsMaker counts only the rows it created. */
+    * [[graft.sources.SnapshotStorage.writeTables]] passes the keys the
+    * batch created in the star, so a snapshot counts the dimension rows it
+    * added, as the reference's ObjectsMaker does: a batch of stored keys
+    * reports 0, and over a load with no reloads each dimension's counts
+    * sum to its rows. */
   def snapshotStats(visits: DataFrame, added: DataFrame): DataFrame = {
     val perSnapshot = visits.groupBy(col("snapshot_id")).agg(
       sum(when(col("parse_ok"), 1L).otherwise(0L)).as(Backfill.Parsed),

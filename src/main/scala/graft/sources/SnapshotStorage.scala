@@ -209,16 +209,18 @@ object SnapshotStorage {
     import graft.Logs.debugTime
     try {
       val sightings = SiriSnapshotEtl.firstSightings(r.visits).as[(String, Long, String)].collect()
-      debugTime("write-dims", "outDir" -> outDir) {
+      val created = debugTime("write-dims", "outDir" -> outDir) {
         together(SiriSnapshotEtl.dims.zip(Seq(r.routes, r.stops, r.rides, r.rideStops)).map {
           case (d, rows) => () =>
-            index.append(d, rows, sightings.collect { case (t, id, _) if t == d.table => id })
+            d.table -> index.append(d, rows, sightings.collect { case (t, id, _) if t == d.table => id })
         })
-      }
-      // one status row per snapshot of the batch: it says which
-      // snapshots now have no facts or no parse errors
+      }.toMap
+      // one status row per snapshot of the batch, counting the keys it
+      // created in the star: it says which snapshots now have no facts or
+      // no parse errors
+      val added = sightings.filter { case (t, id, _) => java.util.Arrays.binarySearch(created(t), id) >= 0 }
       val stats = withSnapshotPartitions(SiriSnapshotEtl.snapshotStats(r.visits,
-        sightings.toSeq.toDF("dim", "id", "snapshot_id")))
+        added.toSeq.toDF("dim", "id", "snapshot_id")))
       val status = stats.collect().toSeq
       together(Seq(
         // facts: zstd (scan-bound table, best ratio at similar decode

@@ -122,6 +122,36 @@ class SiriEtlSpec extends SparkSpec {
     }
   }
 
+  test("num_added_* counts the keys a batch created in the star (ObjectsMaker)") {
+    import org.apache.spark.sql.functions.sum
+    import graft.sources.SnapshotStorage
+    val star = java.nio.file.Files.createTempDirectory("added").toString
+    def table(name: String) = spark.read.parquet(s"$star/$name")
+    def load(id: String, doc: String): Unit =
+      SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw(id -> doc)), star)
+    def added(id: String) = {
+      val row = table("siri_snapshots").filter($"snapshot_id" === id).head()
+      SiriSnapshotEtl.dims.map(d => row.getAs[Long](s"num_added_${d.table}"))
+    }
+    load("2023/03/10/08/01", SiriFixtures.snapA)
+    val rows = SiriSnapshotEtl.dims.map(d => table(d.table).count())
+    assert(added("2023/03/10/08/01") == rows)
+    // a second batch of stored keys adds no dimension row and reports none
+    load("2023/03/10/08/02", SiriFixtures.snapA)
+    assert(SiriSnapshotEtl.dims.map(d => table(d.table).count()) == rows)
+    assert(added("2023/03/10/08/02") == Seq(0L, 0L, 0L, 0L))
+    // over a multi-batch load with no reloads, each dimension's counts sum
+    // to its rows
+    load("2023/03/10/08/03", SiriFixtures.snapB)
+    load("2023/03/10/08/04", SiriFixtures.snapA)
+    val sums = table("siri_snapshots").agg(sum("num_added_siri_routes"), sum("num_added_siri_stops"),
+      sum("num_added_siri_rides"), sum("num_added_siri_ride_stops")).head()
+    SiriSnapshotEtl.dims.zipWithIndex.foreach { case (d, i) =>
+      assert(sums.getLong(i) == table(d.table).count(), d.table)
+    }
+    assert(added("2023/03/10/08/03") == Seq(1L, 1L, 1L, 1L))
+  }
+
   test("a repeated SIRI batch compiles nothing: the plans of a batch fit the codegen cache") {
     import graft.sources.SnapshotStorage
     import org.apache.spark.metrics.source.CodegenMetrics
