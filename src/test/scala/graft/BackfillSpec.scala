@@ -205,9 +205,9 @@ class SnapshotStorageSpec extends SparkSpec {
 
   test("a failed write leaves no job of writeTables running") {
     val star = java.nio.file.Files.createTempDirectory("failedwrite").toFile.getAbsolutePath
-    // a plain file where one dimension's directory goes: its append fails
-    // while the other three run
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(star, "siri_stops"), "not a table")
+    // a plain file where the first dimension's directory goes: its append
+    // fails while the other three run
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(star, "siri_routes"), "not a table")
     intercept[Exception](load(star, "2023/03/10/08/01" -> SiriFixtures.snapA))
     org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
