@@ -14,7 +14,8 @@ import graft.sources.SnapshotStorage.{readRaw, writeTables}
   *   update-pending-snapshots [<from> [<to>]] [--num-days N] [<statusParquet>]
   *   process-old-missing-snapshots [<from> [<to>]] [--num-days N]
   *     [<statusParquet> <rawDir> <outDir>]
-  *   validate-snapshots <rawDir>                   (validate_snapshots)
+  *   validate-snapshots <rawDir> [<etlRoot>] [<fromId> <toId>] [--csv <path>]
+  *                                                 (validate_snapshots)
   *
   * <from>/<to> are snapshot ids (yyyy/MM/dd/HH/mm) or dates
   * (yyyy-MM-dd); both are OPTIONAL on the backfill commands and
@@ -216,15 +217,22 @@ object Cli {
         }
         writeTables(Backfill.processBacklog(spark, from, to,
           Backfill.readStatus(spark, statusParquet), readRaw(spark, rawDir)), outDir)
-      // validate-snapshots <rawDir> [<fromId> <toId>] [--csv <path>]
+      // validate-snapshots <rawDir> [<etlRoot>] [<fromId> <toId>] [--csv <path>]
       // (siri-etl-validate-snapshots DAG: range-bounded field-level
-      // mismatch report, one row per mismatching field, CSV out)
+      // mismatch report of the star at <etlRoot> against a fresh parse of
+      // the raw snapshots, one row per mismatching field, CSV out)
       case "validate-snapshots" :: rawDir :: rest =>
         val csvOut = rest.dropWhile(_ != "--csv").drop(1).headOption
-        val r = SiriSnapshotEtl.run(
-          readRaw(spark, rawDir).filter(inRangeOf(rest.takeWhile(_ != "--csv"))))
-        val bad = SiriSnapshotEtl.validateFields(r.visits, r.vehicleLocations,
-          r.rideStops, r.rides, r.stops)
+        val (etlRoot, range) = rest.takeWhile(_ != "--csv") match {
+          case root :: range if !SnapshotIdArg.matches(root) => (root, range)
+          case range => (Config.etlRoot, range)
+        }
+        def stored(table: String) = spark.read.parquet(s"$etlRoot/$table")
+        val inRange = inRangeOf(range)
+        val bad = SiriSnapshotEtl.validateFields(
+          SiriSnapshotEtl.parseVisits(readRaw(spark, rawDir).filter(inRange)),
+          stored("siri_vehicle_locations").filter(inRange),
+          stored("siri_ride_stops"), stored("siri_rides"), stored("siri_stops"))
         val n = bad.count()
         println(s"validation mismatches: $n")
         csvOut.foreach(p =>

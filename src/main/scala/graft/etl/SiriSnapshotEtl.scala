@@ -1,7 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The reference pipeline (open_bus_siri_etl.process_snapshot) as a
   * declarative Spark job over batches of raw SIRI-SM JSON snapshots.
@@ -16,10 +19,11 @@ import org.apache.spark.sql.functions._
   *  - ObjectsMaker get-or-create (process_snapshot.py:51): four
   *    dimensions keyed by natural keys; first sighting creates the row,
   *    later sightings reuse it. Here: each dimension is declared once
-  *    ([[Dim]]); a batch builds its distinct keys, surrogate =
-  *    xxhash64(natural key) so ids need no global coordination at
-  *    100 TB (SURVEY.md §5), and [[graft.sources.SnapshotStorage.writeTables]]
-  *    appends only the keys its [[graft.sources.DimIndex]] lacks.
+  *    ([[Dim]]); one aggregate over a batch ([[keys]]) gives its
+  *    distinct keys, surrogate = xxhash64(natural key) so ids need no
+  *    global coordination at 100 TB (SURVEY.md §5), and
+  *    [[graft.sources.SnapshotStorage.writeTables]] appends only the keys
+  *    its [[graft.sources.DimIndex]] lacks, built from the collected rows.
   *  - snapshot lifecycle stats (update_siri_snapshot_loaded,
   *    process_snapshot.py:302): per-snapshot success/fail counts and
   *    per-dimension added counts.
@@ -27,9 +31,10 @@ import org.apache.spark.sql.functions._
   *    snapshot are replaced, dims only ever grow.
   *
   * Scale design: one scan parses everything (from_json + two explodes,
-  * all map-side); each dimension is one distinct (partial-agg) pass;
-  * facts are keyed by hashing, with no join; every "first sighting" is a
-  * `min` aggregate per key, never a window. Facts partition by snapshot
+  * all map-side); one aggregate (partial-agg, one shuffle) yields every
+  * dimension's keys and every snapshot's parse counts; facts are keyed
+  * by hashing, with no join; every "first sighting" is a `min` aggregate
+  * per key, never a window. Facts partition by snapshot
   * (date, minute) for single-partition reload.
   */
 object SiriSnapshotEtl {
@@ -121,33 +126,36 @@ object SiriSnapshotEtl {
   /** In `EtlResult` order. */
   private[graft] val dims: Seq[Dim] = Seq(Route, Stop, Ride, RideStop)
 
-  /** A dimension's table from rows that hold its key once each: stored
-    * key, `attrs`, then the surrogates. */
-  private def dimTable(keyed: DataFrame, d: Dim, attrs: Column*): DataFrame =
-    keyed.select(d.key.zip(d.storedKey).map { case (k, s) => col(k).as(s) } ++ attrs ++
-      d.ids.map(r => r.surrogate.as(r.id)): _*)
+  /** The schema of `d`'s rows of [[keys]], whose `schema` it is: `d`'s key
+    * columns as nullable as in `visits` (the keys pass nulls them only in
+    * the other dimensions' rows), so its stored rows keep their types. */
+  private[graft] def keysSchema(d: Dim, schema: StructType, visits: StructType): StructType =
+    StructType(schema.map(f => if (d.key.contains(f.name)) f.copy(nullable = visits(f.name).nullable) else f))
 
-  private def distinctKeys(visits: DataFrame, d: Dim): DataFrame =
-    dimTable(okVisits(visits).select(d.key.map(col): _*).distinct(), d)
+  /** A dimension's table from keys-pass rows ([[keys]]): stored key, a
+    * ride's `scheduled_start_time` from its first sighting, then the
+    * surrogates. */
+  private[graft] def dimTable(keys: DataFrame, d: Dim): DataFrame = {
+    val attrs = if (d eq Ride) Seq(col("first.scheduled_start_time").as("scheduled_start_time")) else Nil
+    keys.filter(col("dim") === d.table)
+      .select(d.key.zip(d.storedKey).map { case (k, s) => col(k).as(s) } ++ attrs ++
+        d.ids.map(r => r.surrogate.as(r.id)): _*)
+  }
 
   /** siri_route(operator_ref, line_ref). */
-  def routes(visits: DataFrame): DataFrame = distinctKeys(visits, Route)
+  def routes(visits: DataFrame): DataFrame = dimTable(keys(visits), Route)
 
   /** siri_stop(code). */
-  def stops(visits: DataFrame): DataFrame = distinctKeys(visits, Stop)
+  def stops(visits: DataFrame): DataFrame = dimTable(keys(visits), Stop)
 
   /** siri_ride(route, journey_ref, vehicle_ref) + scheduled_start_time
     * of the FIRST sighting (reference creates once and never updates —
     * ObjectsMaker caches the created row): the least
     * (recorded_at_time, scheduled_start_time) per key. */
-  def rides(visits: DataFrame): DataFrame = {
-    val first = okVisits(visits).groupBy(Ride.key.map(col): _*)
-      .agg(min(struct(col("recorded_at_time"), col("scheduled_start_time"))).as("first"))
-    dimTable(first, Ride, col("first.scheduled_start_time").as("scheduled_start_time"))
-  }
+  def rides(visits: DataFrame): DataFrame = dimTable(keys(visits), Ride)
 
   /** siri_ride_stop(ride, stop, order). */
-  def rideStops(visits: DataFrame): DataFrame = distinctKeys(visits, RideStop)
+  def rideStops(visits: DataFrame): DataFrame = dimTable(keys(visits), RideStop)
 
   /** siri_vehicle_location facts: every successfully parsed visit, keyed
     * by its ride-stop surrogate. Pure projection — the surrogate is a
@@ -159,41 +167,89 @@ object SiriSnapshotEtl {
         col("lon"), col("lat"), col("bearing"), col("velocity"),
         col("distance_from_journey_start"))
 
-  /** The keys pass: one row per distinct dimension key of the batch —
-    * `dim` (the dimension's table), `id` (its surrogate) and `snapshot_id`
-    * (the least snapshot that saw it) — from one aggregate over the
-    * parsed visits. */
-  private[graft] def firstSightings(visits: DataFrame): DataFrame =
-    okVisits(visits)
-      .select(col("snapshot_id"), explode(array(dims.map(d =>
-        struct(lit(d.table).as("dim"), d.surrogate.as("id"))): _*)).as("key"))
-      .groupBy(col("key.dim").as("dim"), col("key.id").as("id"))
-      .agg(min(col("snapshot_id")).as("snapshot_id"))
+  /** The keys pass: one aggregate over the parsed visits that yields
+    * everything a batch's write needs.
+    *  - One row per distinct key of each dimension: `dim` (its table),
+    *    `id` (its surrogate), `snapshot_id` (the least snapshot that saw
+    *    it), its key columns, the other dimensions' key columns null, and
+    *    for a ride `first`, its least (recorded_at_time,
+    *    scheduled_start_time).
+    *  - One row per snapshot, `dim` null: `snapshot_id` and the counts of
+    *    its visits parsed and failed, in [[Backfill]]'s column names.
+    */
+  private[graft] def keys(visits: DataFrame): DataFrame = {
+    val keyColumns = dims.flatMap(_.key).distinct
+    val first = Seq("recorded_at_time", "scheduled_start_time")
+    val types = Seq("dim" -> StringType, "id" -> LongType, "counted" -> StringType) ++
+      keyColumns.map(k => k -> visits.schema(k).dataType) ++
+      Seq("first" -> StructType(first.map(visits.schema(_))),
+        Backfill.Parsed -> LongType, Backfill.Failed -> LongType)
+    // every entry has every field, typed, so the array's structs agree
+    def entry(set: (String, Column)*): Column = {
+      val given = set.toMap
+      struct(types.map { case (f, t) => given.getOrElse(f, lit(null).cast(t)).as(f) }: _*)
+    }
+    // a snapshot's counts group on its id; a key's on the key alone
+    val counts = entry("counted" -> col("snapshot_id"),
+      Backfill.Parsed -> when(col("parse_ok"), 1L).otherwise(0L),
+      Backfill.Failed -> when(col("parse_ok"), 0L).otherwise(1L))
+    val sightings = dims.map(d => entry(Seq("dim" -> lit(d.table), "id" -> d.surrogate) ++
+      d.key.map(k => k -> col(k)) ++
+      (if (d eq Ride) Seq("first" -> struct(first.map(col): _*)) else Nil): _*))
+    visits
+      .select(col("snapshot_id"), col("parse_ok"), explode(array(counts +: sightings: _*)).as("e"))
+      .filter(col("e.dim").isNull || col("parse_ok"))
+      .groupBy((Seq("dim", "id", "counted") ++ keyColumns).map(f => col(s"e.$f").as(f)): _*)
+      .agg(min(col("snapshot_id")).as("snapshot_id"), min(col("e.first")).as("first"),
+        sum(col(s"e.${Backfill.Parsed}")).as(Backfill.Parsed),
+        sum(col(s"e.${Backfill.Failed}")).as(Backfill.Failed))
+      .drop("counted")
+  }
 
   /** Per-snapshot lifecycle stats: the siri_snapshot status row the
     * reference maintains (parse counts, added-per-dim counts, `loaded`
     * or `error`), in [[Backfill]]'s status-row shape.
     *
     * `num_added_<table>` counts the rows of `added` — (dim, id,
-    * snapshot_id) as [[firstSightings]] yields them — per snapshot.
-    * [[graft.sources.SnapshotStorage.writeTables]] passes the keys the
+    * snapshot_id) as [[keys]] yields them — per snapshot.
+    * [[graft.sources.SnapshotStorage.writeTables]] counts the keys the
     * batch created in the star, so a snapshot counts the dimension rows it
     * added, as the reference's ObjectsMaker does: a batch of stored keys
     * reports 0, and over a load with no reloads each dimension's counts
     * sum to its rows. */
-  def snapshotStats(visits: DataFrame, added: DataFrame): DataFrame = {
-    val perSnapshot = visits.groupBy(col("snapshot_id")).agg(
-      sum(when(col("parse_ok"), 1L).otherwise(0L)).as(Backfill.Parsed),
-      sum(when(col("parse_ok"), 0L).otherwise(1L)).as(Backfill.Failed))
+  def snapshotStats(visits: DataFrame, added: DataFrame): DataFrame =
+    stats(keys(visits), added)
+
+  /** [[snapshotStats]] with every key of the batch added: the counts of
+    * the batch written into an empty star. */
+  def snapshotStats(visits: DataFrame): DataFrame = allAdded(keys(visits))
+
+  private def allAdded(keys: DataFrame): DataFrame = stats(keys, keys.filter(col("dim").isNotNull))
+
+  /** [[snapshotStats]] from the batch's [[keys]]. */
+  private def stats(keys: DataFrame, added: DataFrame): DataFrame = {
+    val perSnapshot = keys.filter(col("dim").isNull)
+      .select(col("snapshot_id"), col(Backfill.Parsed), col(Backfill.Failed))
     val counts = dims.map(d => sum(when(col("dim") === d.table, 1L).otherwise(0L)).as(Backfill.added(d)))
     val perDim = added.groupBy(col("snapshot_id")).agg(counts.head, counts.tail: _*)
     Backfill.loadedOrError(perSnapshot.join(perDim, Seq("snapshot_id"), "left").na.fill(0L))
   }
 
-  /** [[snapshotStats]] with every key of the batch added: the counts of
-    * the batch written into an empty star. */
-  def snapshotStats(visits: DataFrame): DataFrame =
-    snapshotStats(visits, firstSightings(visits))
+  /** [[snapshotStats]] of collected [[keys]] rows: `counts`, the rows of
+    * per-snapshot parse counts, and `added`, the rows of the keys the
+    * batch created in the star. A local relation of rows built here: no
+    * Spark job runs for it. */
+  private[graft] def snapshotStats(spark: SparkSession, counts: Seq[Row], added: Seq[Row]): DataFrame = {
+    val perDim = added.groupMapReduce(k => (k.getAs[String]("snapshot_id"), k.getAs[String]("dim")))(_ => 1L)(_ + _)
+    val rows = counts.map { c =>
+      val id = c.getAs[String]("snapshot_id")
+      Row.fromSeq(Seq(id, c.getAs[Long](Backfill.Parsed), c.getAs[Long](Backfill.Failed)) ++
+        dims.map(d => perDim.getOrElse((id, d.table), 0L)))
+    }
+    val columns = Seq(Backfill.Parsed, Backfill.Failed) ++ dims.map(Backfill.added)
+    Backfill.loadedOrError(spark.createDataFrame(rows.asJava,
+      StructType(StructField("snapshot_id", StringType) +: columns.map(StructField(_, LongType, nullable = false)))))
+  }
 
   /** Reconciliation (validate_snapshots.py): join the star back together
     * and compare it against a fresh parse. Like validate_snapshots.py:100
@@ -245,7 +301,9 @@ object SiriSnapshotEtl {
   /** Run the full pipeline over raw (snapshot_id, json) rows. */
   def run(raw: DataFrame): EtlResult = {
     val visits = parseVisits(raw)
-    EtlResult(visits, routes(visits), stops(visits), rides(visits), rideStops(visits),
-      vehicleLocations(visits), snapshotStats(visits), parseErrors(visits))
+    // one keys plan under all four dimensions and the stats: each is analysed once
+    val k = keys(visits)
+    EtlResult(visits, dimTable(k, Route), dimTable(k, Stop), dimTable(k, Ride),
+      dimTable(k, RideStop), vehicleLocations(visits), allAdded(k), parseErrors(visits))
   }
 }

@@ -3,9 +3,10 @@ package graft.sources
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.etl.SiriSnapshotEtl
@@ -25,16 +26,31 @@ import graft.etl.SiriSnapshotEtl
   */
 private[graft] final class DimIndex(spark: SparkSession, val outDir: String) {
 
-  /** Only ever touched under the dimension's lock. */
+  /** Only ever written under the dimension's lock. */
   private final class Entry {
-    var ids: Array[Long] = Array.emptyLongArray
+    // read without the lock by `lacksAny`; only ever replaced, never mutated
+    @volatile var ids: Array[Long] = Array.emptyLongArray
     var files: Set[String] = Set.empty
   }
 
   private val entries = SiriSnapshotEtl.dims.map(d => d.table -> new Entry).toMap
 
-  /** Get-or-create for one dimension: append the rows of `rows` whose id
-    * is among `batchIds` and not stored, and return those ids (sorted).
+  /** Whether the id of some of `sighted` (keys-pass rows, as [[append]]
+    * takes them) is not among the ids held for `d`. The ids held only grow
+    * and are all stored, so `false` is final: [[append]] would write
+    * nothing. */
+  def lacksAny(d: SiriSnapshotEtl.Dim, sighted: Seq[Row]): Boolean =
+    unheld(entries(d.table).ids, sighted).nonEmpty
+
+  /** The rows of `sighted` whose id `ids` (sorted) lacks. */
+  private def unheld(ids: Array[Long], sighted: Seq[Row]): Seq[Row] =
+    sighted.filter(r => java.util.Arrays.binarySearch(ids, r.getAs[Long]("id")) < 0)
+
+  /** Get-or-create for one dimension: of `sighted`, the batch's rows of
+    * `d` from the collected keys pass ([[SiriSnapshotEtl.keys]]; `schema`
+    * is theirs, [[SiriSnapshotEtl.keysSchema]]), append as one file the
+    * rows whose id is not stored, and return those ids (sorted). The rows are a local relation
+    * through [[SiriSnapshotEtl.dimTable]], so the append reads no visits.
     * A dimension with no new keys writes nothing.
     *
     * Under the dimension's lock it first lists the directory and reads
@@ -44,7 +60,7 @@ private[graft] final class DimIndex(spark: SparkSession, val outDir: String) {
     * difference across it) and the ids it appended, without reading them
     * back. Writers in other JVMs take no lock: one appending during this
     * append's window is not seen, and may store a key twice. */
-  def append(d: SiriSnapshotEtl.Dim, rows: DataFrame, batchIds: Array[Long]): Array[Long] = {
+  def append(d: SiriSnapshotEtl.Dim, sighted: Seq[Row], schema: StructType): Array[Long] = {
     val dir = new Path(outDir, d.table)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val e = entries(d.table)
@@ -56,12 +72,10 @@ private[graft] final class DimIndex(spark: SparkSession, val outDir: String) {
           .parquet(unread.toSeq: _*).as(Encoders.scalaLong).collect())
         e.files ++= unread
       }
-      val fresh = DimIndex.union(Array.emptyLongArray,
-        batchIds.filter(id => java.util.Arrays.binarySearch(e.ids, id) < 0))
+      val rows = unheld(e.ids, sighted)
+      val fresh = DimIndex.union(Array.emptyLongArray, rows.map(_.getAs[Long]("id")).toArray)
       if (fresh.nonEmpty) {
-        import spark.implicits._
-        val ids = fresh.toSeq.toDF("id")
-        rows.join(broadcast(ids), rows(d.id) === ids("id"), "left_semi")
+        SiriSnapshotEtl.dimTable(spark.createDataFrame(rows.asJava, schema), d).coalesce(1)
           .write.mode(SaveMode.Append).parquet(dir.toString)
         e.files ++= dataFiles(fs, dir) -- listed
         e.ids = DimIndex.union(e.ids, fresh)

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
-import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.Path
@@ -149,23 +148,26 @@ object SnapshotStorage {
     * and SQL execution id that `StreamingQuery.stop()` cancels by. A
     * failed write does not cut the wait short, so no sibling is still
     * writing when the first failure is rethrown; neither does an
-    * interrupt of the caller, which is restored after. */
-  private def together[T](writes: Seq[() => T]): Seq[T] = {
-    val pool = Executors.newFixedThreadPool(writes.size)
-    try {
-      val pending = writes.map(w => pool.submit(new Callable[T] { def call(): T = w() }))
-      var interrupted = false
-      val ended = pending.map { f =>
-        var r: Option[Try[T]] = None
-        while (r.isEmpty)
-          try r = Some(Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
-          catch { case _: InterruptedException => interrupted = true }
-        r.get
-      }
-      if (interrupted) Thread.currentThread().interrupt()
-      ended.map(_.get)
-    } finally pool.shutdown()
-  }
+    * interrupt of the caller, which is restored after. None or one write
+    * runs on the caller's own thread. */
+  private def together[T](writes: Seq[() => T]): Seq[T] =
+    if (writes.size <= 1) writes.map(_())
+    else {
+      val pool = Executors.newFixedThreadPool(writes.size)
+      try {
+        val pending = writes.map(w => pool.submit(new Callable[T] { def call(): T = w() }))
+        var interrupted = false
+        val ended = pending.map { f =>
+          var r: Option[Try[T]] = None
+          while (r.isEmpty)
+            try r = Some(Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
+            catch { case _: InterruptedException => interrupted = true }
+          r.get
+        }
+        if (interrupted) Thread.currentThread().interrupt()
+        ended.map(_.get)
+      } finally pool.shutdown()
+    }
 
   /** Write an ETL result as the star schema — idempotently — building a
     * fresh [[DimIndex]] of the star: one scan of each dimension's ids. */
@@ -175,31 +177,35 @@ object SnapshotStorage {
   /** Write an ETL result into the star of `index`, whose dimension keys
     * it reuses and extends.
     *
-    * One keys pass over the visits ([[SiriSnapshotEtl.firstSightings]],
-    * collected) gives every dimension key of the batch; each dimension
-    * appends the keys `index` lacks ([[DimIndex.append]]). Facts / parse
-    * errors / stats partition by (snapshot_date, snapshot_minute), and
-    * each batch overwrites exactly its own snapshots' leaves
-    * ([[overwriteSnapshots]]): reprocessing a snapshot leaves only its new
-    * rows in every table, and no other snapshot's.
+    * One aggregate over the visits, the keys pass
+    * ([[SiriSnapshotEtl.keys]], collected), gives every dimension key of
+    * the batch with its key columns, and every snapshot's parse counts;
+    * it is the batch's only shuffle. Each dimension with a key `index`
+    * lacks appends the rows of the keys not stored ([[DimIndex.append]]),
+    * a local relation of the collected rows. The status rows are one too,
+    * built from the counts and the keys created, so no Spark job runs for
+    * them. Facts / parse errors / stats partition by
+    * (snapshot_date, snapshot_minute), and each batch overwrites exactly
+    * its own snapshots' leaves ([[overwriteSnapshots]]): reprocessing a
+    * snapshot leaves only its new rows in every table, and no other
+    * snapshot's.
     *
     * The writes run in three phases, the writes of a phase together: the
-    * four dimension appends, then facts with parse errors, then the
-    * status rows ([[graft.etl.Backfill]]'s status rows, replacing a
-    * pending one). So dims are in before any fact that references them,
-    * and a snapshot reads `loaded` — the one status that keeps it from
-    * being loaded again — only once its rows are in. */
+    * dimension appends, then facts with parse errors, then the status
+    * rows ([[graft.etl.Backfill]]'s status rows, replacing a pending
+    * one). So dims are in before any fact that references them, and a
+    * snapshot reads `loaded` — the one status that keeps it from being
+    * loaded again — only once its rows are in. */
   private[graft] def writeTables(r: SiriSnapshotEtl.EtlResult, index: DimIndex): Unit = {
     val spark = r.visits.sparkSession
-    import spark.implicits._
     val outDir = index.outDir
-    // every output table derives from the SAME parsed-visits relation,
-    // and each write below is its own Spark action — uncached, the
-    // actions would each re-read AND re-decode/re-parse the raw
-    // snapshot source (measured: the .br drain spends most of its wall
-    // re-decoding brotli per table). Pin visits for the duration of
+    // the facts and parse errors derive from the SAME parsed-visits
+    // relation as the keys pass, and each is its own Spark action —
+    // uncached, the actions would each re-read AND re-decode/re-parse the
+    // raw snapshot source (measured: the .br drain spends most of its
+    // wall re-decoding brotli per table). Pin visits for the duration of
     // the writes; MEMORY_AND_DISK because a backlog drain's mega-batch
-    // may exceed executor memory — a spilled cache still beats eight
+    // may exceed executor memory — a spilled cache still beats three
     // decodes. Unpersisted in finally, after every write has ended: the
     // daemon calls this per micro-batch and must not accumulate cache
     // blocks.
@@ -208,19 +214,23 @@ object SnapshotStorage {
     // debug_time around each process_snapshot phase)
     import graft.Logs.debugTime
     try {
-      val sightings = SiriSnapshotEtl.firstSightings(r.visits).as[(String, Long, String)].collect()
+      val keys = SiriSnapshotEtl.keys(r.visits)
+      // a row with no dim holds one snapshot's parse counts
+      def dim(k: Row) = k.getAs[String]("dim")
+      val (counts, sighted) = keys.collect().toSeq.partition(dim(_) == null)
+      val byDim = sighted.groupBy(dim).withDefaultValue(Nil)
       val created = debugTime("write-dims", "outDir" -> outDir) {
-        together(SiriSnapshotEtl.dims.zip(Seq(r.routes, r.stops, r.rides, r.rideStops)).map {
-          case (d, rows) => () =>
-            d.table -> index.append(d, rows, sightings.collect { case (t, id, _) if t == d.table => id })
+        together(SiriSnapshotEtl.dims.filter(d => index.lacksAny(d, byDim(d.table))).map { d =>
+          () => d.table -> index.append(d, byDim(d.table),
+            SiriSnapshotEtl.keysSchema(d, keys.schema, r.visits.schema))
         })
-      }.toMap
+      }.toMap.withDefaultValue(Array.emptyLongArray)
       // one status row per snapshot of the batch, counting the keys it
       // created in the star: it says which snapshots now have no facts or
       // no parse errors
-      val added = sightings.filter { case (t, id, _) => java.util.Arrays.binarySearch(created(t), id) >= 0 }
-      val stats = withSnapshotPartitions(SiriSnapshotEtl.snapshotStats(r.visits,
-        added.toSeq.toDF("dim", "id", "snapshot_id")))
+      val added = sighted.filter(k =>
+        java.util.Arrays.binarySearch(created(dim(k)), k.getAs[Long]("id")) >= 0)
+      val stats = withSnapshotPartitions(SiriSnapshotEtl.snapshotStats(spark, counts, added))
       val status = stats.collect().toSeq
       together(Seq(
         // facts: zstd (scan-bound table, best ratio at similar decode
@@ -239,8 +249,7 @@ object SnapshotStorage {
             status.filter(_.getAs[Long]("num_failed_parse_vehicle_locations") == 0))
         }))
       debugTime("write-stats", "outDir" -> outDir) {
-        overwriteSnapshots(spark.createDataFrame(status.asJava, stats.schema),
-          s"$outDir/siri_snapshots", Nil)
+        overwriteSnapshots(stats, s"$outDir/siri_snapshots", Nil)
       }
     } finally r.visits.unpersist()
   }

@@ -169,12 +169,56 @@ class SnapshotStorageSpec extends SparkSpec {
       d.table -> new java.io.File(s"$star/${d.table}").list().toSet
     }.toMap
 
+  /** The SQL executions `body` runs, once each has ended. */
+  private def executions(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.ListenerBusAccess.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** The table directories the executions `qes` wrote to. */
+  private def written(qes: Seq[org.apache.spark.sql.execution.QueryExecution]): Seq[String] = {
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    qes.flatMap(_.executedPlan.collect {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) => c.outputPath.getName
+    })
+  }
+
   test("reloading an already-loaded snapshot adds no file to any dimension directory") {
     val star = java.nio.file.Files.createTempDirectory("reloaddims").toFile.getAbsolutePath
     load(star, "2023/03/10/08/01" -> SiriFixtures.snapA, "2023/03/10/08/02" -> SiriFixtures.snapB)
     val before = dimFiles(star)
-    load(star, "2023/03/10/08/02" -> SiriFixtures.snapB)
+    val reload = written(executions(load(star, "2023/03/10/08/02" -> SiriFixtures.snapB)))
     assert(dimFiles(star) == before)
+    // and runs no dimension write job
+    assert(reload.toSet == Set("siri_vehicle_locations", "parse_errors", "siri_snapshots"), reload)
+  }
+
+  test("a writeTables batch shuffles in one SQL execution, the keys pass") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val star = java.nio.file.Files.createTempDirectory("oneshuffle").toFile.getAbsolutePath
+    val qes = executions(load(star, "2023/03/10/08/01" -> SiriFixtures.snapA,
+      "2023/03/10/08/02" -> "{ not json"))
+    // AQE's final plans, query stages included
+    val plans = new AdaptiveSparkPlanHelper {}
+    val shuffling = qes.filter(qe => plans.find(qe.executedPlan)(_.isInstanceOf[ShuffleExchangeLike]).isDefined)
+    assert(shuffling.size == 1,
+      s"${shuffling.size} executions shuffle:\n${shuffling.map(_.executedPlan.treeString).mkString("\n")}")
+    assert(written(qes).toSet == (graft.etl.SiriSnapshotEtl.dims.map(_.table) ++
+      Seq("siri_vehicle_locations", "parse_errors", "siri_snapshots")).toSet)
+    // each dimension append writes one file
+    dimFiles(star).foreach { case (t, files) => assert(files.count(_.endsWith(".parquet")) == 1, t) }
   }
 
   test("a daemon batch after another writer's append stores each key once") {

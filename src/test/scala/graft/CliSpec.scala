@@ -80,12 +80,39 @@ class CliSpec extends SparkSpec {
 
   test("validate-snapshots writes a field-level csv report") {
     val root = Files.createTempDirectory("cliraw3").toString
+    val out = Files.createTempDirectory("cliout3").toString
     val csv = Files.createTempDirectory("clicsv").toString + "/report"
     writeRaw(root, "2023/03/10/08/01", SiriFixtures.snapA)
-    Cli.main(Array("validate-snapshots", root, "--csv", csv))
+    Cli.main(Array("process-snapshots", root, out))
+    Cli.main(Array("validate-snapshots", root, out, "--csv", csv))
     val report = spark.read.option("header", "true").csv(csv)
     assert(report.count() == 0) // clean pipeline → empty report, header-only csv
     assert(report.columns.contains("field") && report.columns.contains("expected"))
+  }
+
+  test("validate-snapshots reports a field corrupted in the stored star") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cliraw4").toString
+    val out = Files.createTempDirectory("cliout4").toString
+    val csv = Files.createTempDirectory("clicsv4").toString + "/report"
+    writeRaw(root, "2023/03/10/08/01", SiriFixtures.snapA)
+    writeRaw(root, "2023/03/10/08/02", SiriFixtures.snapB)
+    Cli.main(Array("process-snapshots", root, out))
+    // overwrite one stored ride's scheduled_start_time; veh-2's ride has
+    // one visit, in 08/01
+    val rides = spark.read.parquet(s"$out/siri_rides")
+    val corrupted = rides.withColumn("scheduled_start_time",
+      when($"journey_ref" === "2023-03-10-100002", to_timestamp(lit("2001-01-01 00:00:00")))
+        .otherwise($"scheduled_start_time"))
+    val rows = corrupted.collect().toSeq
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), rides.schema)
+      .write.mode("overwrite").parquet(s"$out/siri_rides")
+    Cli.main(Array("validate-snapshots", root, out, "2023/03/10/08/01", "2023/03/10/08/02",
+      "--csv", csv))
+    val report = spark.read.option("header", "true").csv(csv).collect()
+    assert(report.map(r => (r.getAs[String]("snapshot_id"), r.getAs[String]("field"),
+      r.getAs[String]("actual"))).toSeq ==
+      Seq(("2023/03/10/08/01", "scheduled_start_time", "2001-01-01 00:00:00")))
   }
 
   test("daemon: streamed raw dir materializes the star schema and resumes from checkpoint") {

@@ -106,7 +106,7 @@ class SiriEtlSpec extends SparkSpec {
       again.rides.select("siri_ride_id").collect().toSet)
   }
 
-  test("get-or-create across batches: only new keys are created (left_anti upsert)") {
+  test("get-or-create across batches: only new keys are created") {
     import graft.sources.SnapshotStorage
     val star = java.nio.file.Files.createTempDirectory("getorcreate").toString
     def table(name: String) = spark.read.parquet(s"$star/$name")
@@ -184,6 +184,51 @@ class SiriEtlSpec extends SparkSpec {
     val ride1 = rides.filter($"journey_ref" === "2023-03-10-100001").head()
     assert(ride1.getAs[java.sql.Timestamp]("scheduled_start_time").toInstant.toString ==
       "2023-03-10T05:45:00Z")
+  }
+
+  test("a stored ride keeps the scheduled_start_time of its earliest recorded visit") {
+    import graft.sources.SnapshotStorage
+    val star = java.nio.file.Files.createTempDirectory("firstride").toString
+    def ride(recorded: String, departed: String, stop: Int, order: Int) =
+      SiriFixtures.visit(1, 25, "100001", "veh-1", stop, order, 34.7, 31.8,
+        recorded = recorded, departed = departed)
+    def stored = spark.read.parquet(s"$star/siri_rides").select("scheduled_start_time")
+      .as[java.sql.Timestamp].collect().map(_.toInstant.toString).toSeq
+    // the earlier recorded visit comes second and has the later departure
+    SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw("2023/03/10/08/01" -> SiriFixtures.snapshot(Seq(
+      ride("2023-03-10T08:01:30+02:00", "2023-03-10T07:40:00+02:00", 32043, 13),
+      ride("2023-03-10T08:01:10+02:00", "2023-03-10T07:50:00+02:00", 32521, 14))))), star)
+    assert(stored == Seq("2023-03-10T05:50:00Z"))
+    // a later batch with a third value leaves the stored row as it is
+    SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw("2023/03/10/08/02" -> SiriFixtures.snapshot(Seq(
+      ride("2023-03-10T08:00:00+02:00", "2023-03-10T07:30:00+02:00", 32043, 13))))), star)
+    assert(stored == Seq("2023-03-10T05:50:00Z"))
+  }
+
+  test("stored status rows equal snapshotStats of the keys the batch created") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.SnapshotStorage
+    val star = java.nio.file.Files.createTempDirectory("statusparity").toString
+    SnapshotStorage.writeTables(SiriSnapshotEtl.run(raw("2023/03/10/08/01" -> SiriFixtures.snapA)), star)
+    val storedIds = SiriSnapshotEtl.dims.map(d =>
+      spark.read.parquet(s"$star/${d.table}").select($"${d.id}".as("id"))).reduce(_ union _)
+    val batch = Seq("2023/03/10/08/02" -> SiriFixtures.snapB, "2023/03/10/08/03" -> "{ not json",
+      "2023/03/10/08/04" -> SiriFixtures.snapshot(Nil), "2023/03/10/08/05" -> SiriFixtures.snapA)
+    val r = SiriSnapshotEtl.run(raw(batch: _*))
+    // the keys the star lacked, each with the first snapshot that saw it
+    val added = SiriSnapshotEtl.keys(r.visits).filter(col("dim").isNotNull)
+      .join(storedIds, Seq("id"), "left_anti")
+    val expected = SiriSnapshotEtl.snapshotStats(r.visits, added).collect().toSet
+    SnapshotStorage.writeTables(r, star)
+    val stored = spark.read.parquet(s"$star/siri_snapshots")
+      .filter($"snapshot_id" =!= "2023/03/10/08/01")
+      .select(expected.head.schema.fieldNames.map(col): _*).collect().toSet
+    assert(stored == expected)
+    // the empty delivery has no row; the malformed document is an error
+    assert(expected.map(_.getAs[String]("snapshot_id")) ==
+      Set("2023/03/10/08/02", "2023/03/10/08/03", "2023/03/10/08/05"))
+    assert(expected.exists(x => x.getAs[String]("etl_status") == "error"))
+    assert(expected.exists(x => x.getAs[Long]("num_added_siri_routes") == 1L))
   }
 
   test("validate: star-schema reassembly reproduces the parse exactly (validate_snapshots)") {
